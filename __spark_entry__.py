@@ -570,12 +570,11 @@ def q_dedup_ngram_jaccard(spark, sf_dir):
 def q_dedup_simhash(spark, sf_dir):
     """SimHash fingerprints + near-dup pairs (hamming<=3 via 4-block
     pigeonhole blocking, 100% recall).  md5-nibble votes: engine-portable,
-    fully oracle-checked.  Fingerprints come from the fused zero-shuffle
-    path (digest array + per-bit vote counts in one projection) — bit-for-
-    bit equal to the explode->groupBy formulation the oracle mirrors."""
-    from ape_dts_spark.operators.text_dedup import simhash_fused, simhash_near_dups
+    fully oracle-checked.  Fingerprints come from simhash's explode ->
+    groupBy formulation, which the oracle mirrors."""
+    from ape_dts_spark.operators.text_dedup import simhash, simhash_near_dups
 
-    fps = simhash_fused(_docs_with_dups(spark, sf_dir))
+    fps = simhash(_docs_with_dups(spark, sf_dir))
     return simhash_near_dups(fps, max_hamming=3)
 
 

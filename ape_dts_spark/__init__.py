@@ -4,8 +4,8 @@ Reproduces the replication semantics of the reference engine ape-dts
 (snapshot seed + LSN-ordered change-stream tail -> last-write-wins keyed
 MERGE into a lake table, with schema-evolution DDL barriers, exactly-once
 via idempotent merge + checkpointed high-watermark, per-batch lineage) —
-re-expressed Spark-first: DataFrame/SQL + window dedup + bucket-pruned
-copy-on-write merge + Arrow pandas UDF extraction.
+re-expressed Spark-first: DataFrame/SQL + bucket-aligned window dedup +
+merge-on-read delta append + Arrow pandas UDF extraction.
 
 This is NOT a port of the reference (a Rust tokio dataflow,
 /root/reference); see SURVEY.md for the semantic mapping.

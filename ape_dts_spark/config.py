@@ -26,7 +26,6 @@ user's mental model maps 1:1:
     [sinker]
     sink_type=write                     ; write | check
     pages_path=/data/pages
-    merge_mode=mor                      ; mor | cow
     compact_ratio=0.5
     catalog_root=/data/db               ; enables in-stream table-lifecycle DDL
     expire_keep_last=10                 ; snapshot retention + orphan GC (0 = off)
@@ -49,7 +48,7 @@ user's mental model maps 1:1:
 
     [parallelizer]
     parallel_type=rdb_merge             ; kept for parity; Spark plans the lanes
-    salt=16                             ; hot-key salting fan-out
+    files_per_bucket=1                  ; write lanes (and files) per bucket per batch
 """
 
 from __future__ import annotations
@@ -117,9 +116,7 @@ def load_task_config(path_or_text: str, is_text: bool = False) -> EngineConfig:
         start_lsn=int(ext.get("start_lsn", "0")),
         filter=change_filter,
         router=Router(col_map=col_map),
-        salt=int(par.get("salt", "16")),
         files_per_bucket=int(par.get("files_per_bucket", "1")),
-        merge_mode=snk.get("merge_mode", "mor"),
         compact_ratio=float(snk.get("compact_ratio", "0.5")),
         transform=prc.get("transform") or None,
         catalog_root=snk.get("catalog_root") or None,

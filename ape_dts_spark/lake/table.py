@@ -5,7 +5,7 @@ partition spec, schema evolution).  No Iceberg runtime jar exists in this
 sandbox, so the engine ships its own structurally-equivalent table format —
 built from public lakehouse concepts (Iceberg spec: versioned manifests +
 atomic pointer swap; column-id based schema evolution) and implemented in
-~400 lines of plain Python + Spark parquet IO:
+plain Python + Spark parquet IO:
 
   table_dir/
     _meta/v{N}.json      one immutable manifest per committed snapshot
@@ -18,9 +18,10 @@ atomic pointer swap; column-id based schema evolution) and implemented in
   temp/data files, never a torn table.  On S3/HDFS the link step would be
   a catalog conditional-put (documented, same protocol as Iceberg).
 * **bucket(N, key) layout** — every data file belongs to exactly one
-  bucket ``pmod(xxhash64(key), N)``.  MERGE rewrites only affected buckets
-  (copy-on-write) and the merge join is bucket-aligned, which bounds
-  shuffle at 10^10-row scale (the storage-partitioned-join idea).
+  bucket ``pmod(xxhash64(key), N)``.  MERGE appends per-bucket delta files
+  (merge-on-read), and reads and compaction resolve last-write-wins with
+  one shuffle on the bucket column, which bounds shuffle at 10^10-row
+  scale (the storage-partitioned-join idea).
 * **Schema evolution** — columns carry permanent ids; add/rename/widen
   create a new schema version without rewriting data.  Readers map each
   file's stored names/types to the current schema by id (name-mapping),
@@ -705,19 +706,18 @@ class LakeTable:
         spark: SparkSession,
         buckets: list[int] | None = None,
         properties: dict[str, str] | None = None,
-        keep_tombstones: bool = True,
     ) -> int:
         """Fold delta files into base files (resolved LWW rows), per bucket.
 
         Targeted: pass `buckets` to compact only the hot ones; default
         compacts every bucket that has deltas.  Atomic single commit.
 
-        keep_tombstones: winning delete markers are rewritten into a compact
-        delta file instead of being dropped, so an out-of-order upsert with a
-        lower order value (possible with unordered streaming sources) can
-        never resurrect a deleted key.  Bounded: one tombstone per deleted
-        key.  Pass False only when the feed is strictly LSN-sliced (the
-        batch driver's hwm guard already makes late replays no-ops)."""
+        Winning delete markers are always kept: they are rewritten into
+        tombstone files instead of being dropped, so an out-of-order upsert
+        with a lower order value can never resurrect a deleted key.  The
+        streaming tail's file source (streaming/stream.py) is not sliced by
+        lsn, so such late upserts do arrive there.  Bounded: one tombstone
+        per deleted key."""
         if buckets is None:
             buckets = sorted(
                 {f["bucket"] for f in self.manifest.files if f.get("kind") == "delta"}
@@ -749,8 +749,6 @@ class LakeTable:
             F.col(f["name"]).cast(spark_type(f["type"])).alias(f["name"])
             for f in cur.fields
         ]
-        if not keep_tombstones:
-            resolved = resolved.filter(F.col(OP_MARKER_COL) != "delete")
         # single staged write for base rows AND tombstones, split by a `_kind`
         # partition dir (one pass over the data — no persist, no re-resolve).
         # Base files carry a vestigial `_op` column; reads use explicit
@@ -767,46 +765,6 @@ class LakeTable:
         props = dict(self.manifest.properties)
         props.update(properties or {})
         m = self._next_manifest(files=kept + entries, properties=props)
-        self._publish(m)
-        return m.version
-
-    def overwrite_buckets(
-        self,
-        df: DataFrame,
-        buckets: list[int],
-        properties: dict[str, str] | None = None,
-    ) -> int:
-        """Copy-on-write replace of the given buckets' contents with df.
-
-        df must contain a `_bucket` int column restricted to `buckets` plus the
-        current-schema columns.  Files of untouched buckets are carried over
-        unchanged — this is what keeps MERGE write amplification proportional
-        to touched buckets, not table size.
-        """
-        cur = self.schema
-        cols = [F.col(f["name"]).cast(spark_type(f["type"])).alias(f["name"]) for f in cur.fields]
-        out = df.select(*cols, F.col(BUCKET_COL))
-        entries = self._stage_write(out, with_bucket_col=True)
-        bset = set(buckets)
-        kept = [f for f in self.manifest.files if f["bucket"] not in bset]
-        props = dict(self.manifest.properties)
-        props.update(properties or {})
-        m = self._next_manifest(files=kept + entries, properties=props)
-        self._publish(m)
-        return m.version
-
-    def overwrite_all(self, df: DataFrame, properties: dict[str, str] | None = None) -> int:
-        cur = self.schema
-        cols = [F.col(f["name"]).cast(spark_type(f["type"])).alias(f["name"]) for f in cur.fields]
-        out = df.select(*cols)
-        if self.manifest.bucket_key:
-            out = out.withColumn(BUCKET_COL, self.bucket_expr())
-            entries = self._stage_write(out, with_bucket_col=True)
-        else:
-            entries = self._stage_write(out, with_bucket_col=False)
-        props = dict(self.manifest.properties)
-        props.update(properties or {})
-        m = self._next_manifest(files=entries, properties=props)
         self._publish(m)
         return m.version
 

@@ -15,49 +15,23 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-# Salt fan-out for the two-phase dedup. A url with a burst of B events first
-# reduces to <= SALT_BUCKETS candidates map-side, so the final per-url window
-# group is bounded — the analog of the reference's partition_parallelizer
-# hash-lane split plus the north rule's hot-key salting.
-DEFAULT_SALT = 16
 
+def lww_dedup(df: DataFrame, key_cols: list[str], order_col: str = "lsn") -> DataFrame:
+    """Keep exactly one row per key: the one with the highest `order_col`.
 
-def lww_dedup(
-    df: DataFrame,
-    key_cols: list[str],
-    order_col: str = "lsn",
-    tiebreak_cols: list[str] | None = None,
-    two_phase: bool = False,
-    salt: int = DEFAULT_SALT,
-) -> DataFrame:
-    """Keep exactly one row per key: the one with the highest (order, tiebreak).
+    A plain per-key window: Catalyst rewrites the ``row_number() == 1``
+    filter into Partial (pre-shuffle, per map task) + Final
+    WindowGroupLimit, so a hot key's burst is reduced to one candidate per
+    map task BEFORE the Exchange — a native map-side combine with ONE
+    shuffle.  Measured on a 10M-event burst (one url x 5M events) against
+    an explicit salted two-phase pre-reduce: 0.86s vs 1.55s, identical
+    survivors (`BENCH/lww_group_limit_ab_r4.json`; plan shape pinned by
+    test_lww_plain_plan_uses_group_limit).
 
-    The default is the PLAIN per-key window: Catalyst rewrites the
-    ``row_number() == 1`` filter into Partial (pre-shuffle, per map task) +
-    Final WindowGroupLimit, so a hot key's burst is reduced to one candidate
-    per map task BEFORE the Exchange — the map-side combine the explicit
-    two-phase mode was built for, done natively with ONE shuffle.  Measured
-    on a 10M-event burst (one url x 5M events): plain 0.86s vs salted
-    two-phase 1.55s, identical survivors (`BENCH/lww_group_limit_ab_r4.json`;
-    plan shape pinned by test_lww_plain_plan_uses_group_limit).
-
-    ``two_phase=True`` keeps the explicit salted pre-reduce for engines or
-    plan shapes where the rewrite does not fire — it pays a second Exchange
-    for the same bound.
+    The engine uses this for tables not bucketed on the key;
+    lww_dedup_bucket_aligned is the path for tables that are.
     """
-    order_exprs = [F.col(order_col).desc()] + [F.col(c).desc() for c in (tiebreak_cols or [])]
-
-    if two_phase and salt > 1:
-        salt_col = F.pmod(F.xxhash64(F.col(order_col)), F.lit(salt))
-        w1 = Window.partitionBy(*key_cols, "_salt").orderBy(*order_exprs)
-        df = (
-            df.withColumn("_salt", salt_col)
-            .withColumn("_rn", F.row_number().over(w1))
-            .filter(F.col("_rn") == 1)
-            .drop("_salt", "_rn")
-        )
-
-    w = Window.partitionBy(*key_cols).orderBy(*order_exprs)
+    w = Window.partitionBy(*key_cols).orderBy(F.col(order_col).desc())
     return df.withColumn("_rn", F.row_number().over(w)).filter(F.col("_rn") == 1).drop("_rn")
 
 

@@ -1,4 +1,4 @@
-"""MERGE INTO — keyed upsert/delete apply with two physical strategies.
+"""MERGE INTO — keyed upsert/delete apply as a merge-on-read delta append.
 
 The single operator that replaces the reference's whole sink layer: batched
 DELETE + batched INSERT/REPLACE + serial UPDATE with retry fallbacks
@@ -7,24 +7,19 @@ rdb_query_builder.rs:122-351) and the foxlake lake-merge two-phase push
 (sinker/foxlake/foxlake_merger.rs:49-118 — `MERGE INTO ... DEDUPLICATION=
 'SOURCE'`), the reference's own lake-sink precedent for this shape.
 
-Physical strategies (10^10-row / 100 TB design point):
+The deduped batch is appended as bucket-partitioned delta files with
+upsert/delete markers.  NO target read, NO rewrite: IO is O(batch)
+regardless of table size, which is what lets throughput scale with
+executors instead of saturating on rewrite IO (this is the Flink-CDC ->
+Iceberg equality-delete design).  Readers resolve last-write-wins per key;
+LakeTable.compact() folds deltas into base files, per bucket, when their
+fraction passes a threshold.
 
-* **mor (default, merge-on-read)** — the deduped batch is appended as
-  bucket-partitioned delta files with upsert/delete markers.  NO target
-  read, NO rewrite: IO is O(batch) regardless of table size, which is what
-  lets throughput scale with executors instead of saturating on rewrite IO
-  (this is the Flink-CDC -> Iceberg equality-delete design).  Readers
-  resolve last-write-wins per key; LakeTable.compact() folds deltas into
-  base files when their fraction passes a threshold.
-* **cow (copy-on-write)** — read affected buckets (file-pruned via the
-  manifest), union with the batch, LWW window, rewrite those buckets.
-  Write amplification O(touched buckets); best for read-heavy tables with
-  localized updates.
-
-Both are idempotent on (url, lsn): every row carries `last_lsn`, so a
-replayed slice loses/ties the LWW window and the result is value-identical
-(the reference's REPLACE idempotence, docs/en/config.md:30, made exact).
-Row counts ride the Observation API — no extra pass over the data.
+The apply is idempotent on (url, lsn): every row carries `last_lsn`, so a
+replayed slice loses/ties the LWW resolution and the result is value-
+identical (the reference's REPLACE idempotence, docs/en/config.md:30, made
+exact).  Row counts come from the written files' parquet footers — no extra
+pass over the data.
 """
 
 from __future__ import annotations
@@ -32,7 +27,7 @@ from __future__ import annotations
 import time
 from dataclasses import dataclass
 
-from pyspark.sql import DataFrame, Observation, SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ape_dts_spark.lake.table import BUCKET_COL, OP_MARKER_COL, LakeTable, spark_type
@@ -51,22 +46,19 @@ class MergeStats:
     deleted_rows: int
     new_version: int
     wall_ms: int
-    mode: str = "mor"
-    skipped: bool = False
-    # MOR only: per-bucket {"rows", "deletes"} from the written delta files'
-    # footers — the reference's per-lane counters (counter_type.rs:4-49);
-    # summing rows over buckets gives the batch's sinked total exactly once
-    per_bucket: dict | None = None
+    # per-bucket {"rows", "deletes"} from the written delta files' footers —
+    # the reference's per-lane counters (counter_type.rs:4-49); summing rows
+    # over buckets gives the batch's sinked total exactly once
+    per_bucket: dict
 
 
-def _source_payload(table: LakeTable, src: DataFrame, include_last_lsn: bool) -> list:
+def _source_payload(table: LakeTable, src: DataFrame) -> list:
     types = {f["name"]: f["type"] for f in table.schema.fields}
     cols = []
     for f in table.schema.fields:
         c = f["name"]
         if c == LAST_LSN_COL:
-            if include_last_lsn:
-                cols.append(F.col(LSN_COL).cast("long").alias(LAST_LSN_COL))
+            cols.append(F.col(LSN_COL).cast("long").alias(LAST_LSN_COL))
             continue
         cols.append(
             (
@@ -84,7 +76,6 @@ def merge_into(
     changes: DataFrame,
     properties: dict[str, str] | None = None,
     dedup_source: bool = True,
-    mode: str = "mor",
     pre_clustered: bool = False,
 ) -> MergeStats:
     """Apply a keyed change batch (op in insert|update|delete, lsn-ordered).
@@ -98,88 +89,28 @@ def merge_into(
     t0 = time.monotonic()
 
     src = lww_dedup(changes, [key], LSN_COL) if dedup_source else changes
-
-    if mode == "mor":
-        carry = [F.col(BUCKET_COL)] if BUCKET_COL in src.columns else []
-        delta = src.select(
-            *_source_payload(table, src, include_last_lsn=True),
-            F.when(F.col(OP_COL) == "delete", F.lit("delete"))
-            .otherwise(F.lit("upsert"))
-            .alias(OP_MARKER_COL),
-            *carry,
-        )
-        # counts come from the written delta files' parquet footers (exact,
-        # driver-side, zero extra Spark work) — unlike an Observation they
-        # exist on every plan shape, streaming foreachBatch included
-        new_version, affected, per_bucket = table.append_delta(
-            delta, properties=properties, pre_clustered=pre_clustered
-        )
-        n_rows = sum(c["rows"] for c in per_bucket.values())
-        n_del = sum(c["deletes"] for c in per_bucket.values())
-        return MergeStats(
-            affected_buckets=affected,
-            source_rows=n_rows,
-            output_rows=n_rows - n_del,
-            deleted_rows=n_del,
-            new_version=new_version,
-            wall_ms=int((time.monotonic() - t0) * 1000),
-            mode="mor",
-            per_bucket=per_bucket,
-        )
-
-    # ---------------- copy-on-write path ----------------
-    src = src.withColumn(BUCKET_COL, table.bucket_expr())
-    # Bucket pruning: which of the N buckets does this batch touch?  A tiny
-    # collect (<= bucket_count ints) — the lake analog of partition pruning.
-    affected = sorted(r[0] for r in src.select(BUCKET_COL).distinct().collect())
-    if not affected:
-        return MergeStats(
-            [], 0, 0, 0, table.version, int((time.monotonic() - t0) * 1000), "cow", True
-        )
-
-    payload_cols = [f["name"] for f in table.schema.fields if f["name"] != LAST_LSN_COL]
-    target = table.read(spark, buckets=affected)
-    t_side = target.select(
-        *[F.col(c) for c in payload_cols],
-        F.col(LAST_LSN_COL).alias("_order"),
-        F.lit(0).alias("_src"),
-        F.lit("upsert").alias("_mop"),
+    carry = [F.col(BUCKET_COL)] if BUCKET_COL in src.columns else []
+    delta = src.select(
+        *_source_payload(table, src),
+        F.when(F.col(OP_COL) == "delete", F.lit("delete"))
+        .otherwise(F.lit("upsert"))
+        .alias(OP_MARKER_COL),
+        *carry,
     )
-    s_side = src.select(
-        *_source_payload(table, src, include_last_lsn=False),
-        F.col(LSN_COL).cast("long").alias("_order"),
-        F.lit(1).alias("_src"),
-        F.when(F.col(OP_COL) == "delete", F.lit("delete")).otherwise(F.lit("upsert")).alias("_mop"),
+    # counts come from the written delta files' parquet footers (exact,
+    # driver-side, zero extra Spark work) — unlike an Observation they
+    # exist on every plan shape, streaming foreachBatch included
+    new_version, affected, per_bucket = table.append_delta(
+        delta, properties=properties, pre_clustered=pre_clustered
     )
-    obs_src = Observation()
-    s_side = s_side.observe(obs_src, F.count(F.lit(1)).alias("rows"))
-    merged = lww_dedup(
-        t_side.unionByName(s_side),
-        [key],
-        order_col="_order",
-        tiebreak_cols=["_src"],
-        two_phase=False,  # source already deduped; target has 1 row/key
-    )
-    obs_out = Observation()
-    merged = merged.observe(
-        obs_out,
-        F.count(F.lit(1)).alias("rows"),
-        F.sum(F.when(F.col("_mop") == "delete", 1).otherwise(0)).alias("deletes"),
-    )
-    survivors = (
-        merged.filter(F.col("_mop") != "delete")
-        .withColumn(LAST_LSN_COL, F.col("_order"))
-        .withColumn(BUCKET_COL, table.bucket_expr())
-        .drop("_order", "_src", "_mop")
-    )
-    new_version = table.overwrite_buckets(survivors, affected, properties=properties)
-    out = obs_out.get
+    n_rows = sum(c["rows"] for c in per_bucket.values())
+    n_del = sum(c["deletes"] for c in per_bucket.values())
     return MergeStats(
         affected_buckets=affected,
-        source_rows=int(obs_src.get["rows"]),
-        output_rows=int(out["rows"]) - int(out["deletes"] or 0),
-        deleted_rows=int(out["deletes"] or 0),
+        source_rows=n_rows,
+        output_rows=n_rows - n_del,
+        deleted_rows=n_del,
         new_version=new_version,
         wall_ms=int((time.monotonic() - t0) * 1000),
-        mode="cow",
+        per_bucket=per_bucket,
     )

@@ -2,7 +2,7 @@
 
 The north-rule job salts the url shuffle to defeat hot-domain skew; this
 module computes the evidence — per-key hotness and skew ratios over a
-change batch — so an operator (or a human) can pick `salt` /
+change batch — so an operator (or a human) can pick
 `files_per_bucket` from data instead of folklore.  Reference analog: the
 monitor's per-table rps counters (dt-common/src/monitor/), which are the
 only skew signal ape-dts exposes.

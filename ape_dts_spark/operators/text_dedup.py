@@ -410,23 +410,6 @@ def simhash(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> 
     return agg.select(F.col(id_col), half(32).alias("fp_hi"), half(0).alias("fp_lo"))
 
 
-def simhash_fused(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
-    """simhash() — kept as an alias for the explode -> groupBy formulation.
-
-    Round 5's version computed the 64 bit-votes as 64 interpreted
-    higher-order ``filter + size`` passes over a per-doc digest array
-    ("zero shuffle"), with a ``size(_d) > 0`` guard that predicate pushdown
-    re-evaluated below ``_spread``'s repartition on the un-spread input.
-    Measured in r6: 64 interpreted array passes per doc cost strictly more
-    CPU than the explode path's whole-stage-codegen aggregate, at every
-    scale — and the groupBy's exchange moves only the 65-long partial-agg
-    row per doc (docs never straddle partitions), not per-word rows.  The
-    explode form wins on both axes, so the fused variant now IS the explode
-    form (fingerprints were pinned bit-identical between the two all
-    along — test_fused_simhash_equivalence)."""
-    return simhash(docs, id_col, text_col)
-
-
 def simhash_near_dups(
     fps: DataFrame, id_col: str = "doc_id", max_hamming: int = 3
 ) -> DataFrame:

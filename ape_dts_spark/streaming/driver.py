@@ -9,9 +9,9 @@ One batch = one LSN slice (hwm, hi]:
   -> filter/route (ChangeFilter, Router)
   -> split key-changing updates into delete+insert
   -> quarantine NULL-key rows
+  -> LWW dedup per url (sharing its one shuffle with the bucket layout)
   -> vectorized text extraction (Arrow pandas UDF)
-  -> two-phase salted LWW dedup per url
-  -> bucket-pruned copy-on-write MERGE into the pages LakeTable
+  -> merge-on-read delta append into the pages LakeTable
   -> lineage rows (per affected bucket) + checkpoint row (high-watermark)
 
 Exactly-once: the MERGE commit carries `hwm_lsn` in the table manifest; the
@@ -99,7 +99,6 @@ class EngineConfig:
     key_col: str = "url"
     filter: ChangeFilter = field(default_factory=ChangeFilter)
     router: Router = field(default_factory=Router)
-    salt: int = 16
     extract_text: bool = True
     # pluggable user transform (the reference's Lua processor hook,
     # dt-pipeline/src/lua_processor.rs:14-53): a callable DataFrame ->
@@ -108,20 +107,11 @@ class EngineConfig:
     # and row drops (the Lua `row_type=""` idiom) are just a .filter inside
     # the hook.  None disables.
     transform: object | None = None
-    # "bucket_aligned": dedup shares its single shuffle with the sink's
-    # bucket layout (the scale path); "plain": per-key window whose
-    # row_number()==1 filter Catalyst rewrites to Partial+Final
-    # WindowGroupLimit (map-side hot-key pre-reduce, one Exchange);
-    # "two_phase": the explicit salted pre-reduce using `salt` (escape
-    # hatch — measured slower than the rewrite for the same bound,
-    # BENCH/lww_group_limit_ab_r4.json)
-    dedup_strategy: str = "bucket_aligned"
     # write-parallelism multiplier: bucket_count x files_per_bucket concurrent
     # lanes through dedup/extract/delta-write (keys stay whole per lane; the
     # sink gets this many files per bucket per batch).  Raise when executor
     # count exceeds the table's bucket_count.
     files_per_bucket: int = 1
-    merge_mode: str = "mor"  # "mor" (O(batch) delta append) | "cow" (bucket rewrite)
     # two-way-sync identity + outbound change feed (reference data_marker.rs
     # + kafka_sinker.rs): when feed_path is set, every applied batch is also
     # emitted as keyed change records stamped with node_id (locally-born rows
@@ -309,7 +299,7 @@ def maybe_compact(
     when a fold ran, else None — recorded in the batch log so a slow fold is
     attributable (oversized single bucket vs packing underestimate vs host
     window; r4 verdict item 6)."""
-    if cfg.merge_mode != "mor" or cfg.compact_ratio <= 0:
+    if cfg.compact_ratio <= 0:
         return None
     per = pages.delta_stats()["per_bucket"]
     cand = [
@@ -367,16 +357,8 @@ def resolve_transform(spec) -> object | None:
 def prepare_changes(pages: LakeTable, df: DataFrame, cfg: "EngineConfig") -> DataFrame:
     """The shared per-batch transform chain (batch driver + streaming path):
     filter -> route -> user transform hook -> key-change split -> NULL-key
-    quarantine -> schema projection (rename-aware) -> salted LWW dedup ->
+    quarantine -> schema projection (rename-aware) -> LWW dedup ->
     vectorized extraction."""
-    if cfg.dedup_strategy not in ("bucket_aligned", "plain", "two_phase"):
-        # the fallback meaning changed in round 4 (plain window instead of
-        # salted two-phase): a typo'd strategy must not silently pick a
-        # different skew guard than the one configured
-        raise ValueError(
-            f"unknown dedup_strategy {cfg.dedup_strategy!r}; "
-            "expected bucket_aligned | plain | two_phase"
-        )
     df = cfg.filter.apply(df)
     df = cfg.router.route_cols(df)
     hook = resolve_transform(cfg.transform)
@@ -408,25 +390,17 @@ def prepare_changes(pages: LakeTable, df: DataFrame, cfg: "EngineConfig") -> Dat
 
     # LWW compaction BEFORE the expensive text extraction: a url hit by a
     # burst of B events is extracted once, not B times.
-    if cfg.dedup_strategy == "bucket_aligned" and pages.manifest.bucket_key == cfg.key_col:
+    if pages.manifest.bucket_key == cfg.key_col:
         # single shuffle, shared with the delta write's bucket layout
         projected = projected.withColumn(BUCKET_COL, pages.bucket_expr())
         deduped = lww_dedup_bucket_aligned(
             projected, [cfg.key_col], "lsn", BUCKET_COL, key_salt=cfg.files_per_bucket
         )
     else:
-        # plain window by default: WindowGroupLimit pre-reduces hot-key
-        # bursts map-side with one Exchange (see lww_dedup docstring; the
-        # salted two-phase measured strictly slower for the same bound).
-        # dedup_strategy="two_phase" keeps the explicit salted pre-reduce
-        # as the configured escape hatch, honoring cfg.salt.
-        deduped = lww_dedup(
-            projected,
-            [cfg.key_col],
-            "lsn",
-            two_phase=cfg.dedup_strategy == "two_phase",
-            salt=cfg.salt,
-        )
+        # a table bucketed on another column (or not at all): the plain
+        # per-key window, whose WindowGroupLimit pre-reduces hot-key bursts
+        # map-side with one Exchange
+        deduped = lww_dedup(projected, [cfg.key_col], "lsn")
     if cfg.extract_text and "html" in projected.columns:
         deduped = deduped.withColumn(
             "text",
@@ -961,11 +935,7 @@ class CdcEngine:
                         "job_id": cfg.job_id,
                     },
                     dedup_source=False,  # already deduped above
-                    mode=cfg.merge_mode,
-                    pre_clustered=(
-                        cfg.dedup_strategy == "bucket_aligned"
-                        and self.pages.manifest.bucket_key == cfg.key_col
-                    ),
+                    pre_clustered=self.pages.manifest.bucket_key == cfg.key_col,
                 )
                 # AFTER the merge commit (see EngineConfig.content_index_path
                 # for the crash-window contract): record only the inserts
@@ -1253,11 +1223,11 @@ class CdcEngine:
         written to its delta files), merged_rows = its upserts, deleted_rows
         = its deletes.  Summing any column over a batch's rows gives the
         batch total exactly once (no duplicated batch-level counts).  The
-        raw pre-dedup slice count stays in metrics['record_count'].  A merge
-        without per-bucket counts (COW mode) emits a single batch-summary
-        row with partition_id = -1."""
+        raw pre-dedup slice count stays in metrics['record_count'].  An
+        empty batch (no bucket written) emits a single row with
+        partition_id = -1, so every batch leaves a lineage row."""
         wall = int((time.monotonic() - t0) * 1000)
-        pb = getattr(stats, "per_bucket", None)
+        pb = stats.per_bucket
         if pb:
             rows = [
                 (
@@ -1283,9 +1253,9 @@ class CdcEngine:
                     lo + 1,
                     hi,
                     input_records,
-                    max(stats.output_rows, 0) if stats else 0,
-                    max(stats.deleted_rows, 0) if stats else 0,
-                    stats.new_version if stats else self.pages.version,
+                    0,
+                    0,
+                    stats.new_version,
                     wall,
                 )
             ]

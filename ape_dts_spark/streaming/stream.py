@@ -11,14 +11,12 @@ so replays after a crash converge — the same two-layer guarantee as the
 batch driver (and as the reference's ack-after-commit protocol,
 pg_cdc_extractor.rs:230-262).
 
-Constraints of the streaming flavor (v1): no mid-stream DDL barriers (run
-the batch driver for schema-evolving replays), and MOR merge mode only.
-COW would be unsafe here: the file source gives no LSN-slice ordering, and
-the COW path drops deleted keys without tombstones — a late file carrying a
-lower-lsn upsert for an already-deleted key would resurrect it.  MOR keeps
-delete markers (and compaction retains tombstones), so late arrivals only
-ever lose the LWW race, never corrupt.  The batch CdcEngine's ordered LSN
-slices are what make COW safe there.
+Constraint of the streaming flavor (v1): no mid-stream DDL barriers (run
+the batch driver for schema-evolving replays).  The file source gives no
+LSN-slice ordering, so a late file may carry a lower-lsn upsert for a key
+an earlier batch already deleted; the merge-on-read sink keeps delete
+markers (and compaction retains them as tombstones), so such late arrivals
+only ever lose the LWW race, never resurrect the key.
 """
 
 from __future__ import annotations
@@ -52,12 +50,6 @@ def start_stream(
     """
     if cfg.ddl_path:
         raise ValueError("streaming mode does not support DDL barriers; use CdcEngine")
-    if cfg.merge_mode != "mor":
-        raise ValueError(
-            "streaming mode requires merge_mode='mor' (tombstone-retaining): "
-            "without LSN-sliced batches, COW could resurrect deleted keys from "
-            "late files; use CdcEngine for cow replays"
-        )
     pages = LakeTable.load(cfg.pages_path)
     schema = spark.read.parquet(cfg.changes_path).schema
     reader = spark.readStream.schema(schema)
@@ -89,11 +81,7 @@ def start_stream(
                 deduped,
                 properties={"stream_batch_id": str(batch_id), "job_id": cfg.job_id},
                 dedup_source=False,
-                mode=cfg.merge_mode,
-                pre_clustered=(
-                    cfg.dedup_strategy == "bucket_aligned"
-                    and pages.manifest.bucket_key == cfg.key_col
-                ),
+                pre_clustered=pages.manifest.bucket_key == cfg.key_col,
             )
         finally:
             # release even when feed/merge raises — a failed micro-batch must

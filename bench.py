@@ -8,14 +8,14 @@ Default mode (driver contract): run at $SPARK_GRAFT_SF_DIR (default
 The CDC workload is the engine's real job: a deterministic synthetic
 web-page snapshot + LSN-ordered change stream (sized from the sf dir's
 events table: seed_urls = |events|, change_events = 2x|events|), replayed
-through CdcEngine (filter -> route -> vectorized extract -> salted LWW
-dedup -> bucket-pruned MERGE -> lineage + checkpoints) with 3 mid-stream
+through CdcEngine (filter -> route -> bucket-aligned LWW dedup ->
+vectorized extract -> MOR delta MERGE -> lineage + checkpoints) with 3 mid-stream
 DDL barriers — i.e. the same shape the north rule measures at 10^10 scale.
 
 --scaling: run the identical job at local[4] and local[16] on the same
 input and report throughput at both plus efficiency = speedup/4 — the
 sandbox stand-in for the N vs 4N executor criterion (see BENCH/BASELINE.md;
-scripts/scaling_probe.py is the full interleaved-reps version).
+`python3 perfbench/run.py --workload cdc_scaling` is the host-sized version).
 
 Each scaling level runs in its OWN subprocess, CPU-affinity-pinned to
 exactly that many cores before the JVM starts: (a) a JVM reused across

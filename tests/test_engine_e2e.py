@@ -200,23 +200,6 @@ def test_full_ddl_crash_replay_converges(spark, full_ddl_dir, tmp_path, stage):
     _assert_tables_equal(_pages_pd(spark, t), _oracle_pd(spark, full_ddl_dir))
 
 
-def test_cow_mode_e2e_and_summary_lineage(spark, fixture_dir, tmp_path):
-    """Copy-on-write merge mode through the engine: final state equals the
-    oracle, and lineage (which has no per-bucket file counts on the COW
-    path) emits exactly ONE batch-summary row per batch (partition_id=-1)
-    carrying the batch totals — never duplicated per bucket."""
-    t = _seed_pages(spark, tmp_path / "pages")
-    eng, summary = _run(spark, fixture_dir, t.path, merge_mode="cow", compact_ratio=0.0)
-    got = _pages_pd(spark, t)
-    want = _oracle_pd(spark, fixture_dir)
-    _assert_tables_equal(got, want)
-    ln = eng.lineage.read(spark).toPandas()
-    assert (ln["partition_id"] == -1).all()
-    per_batch = ln.groupby("batch_id").size()
-    assert (per_batch == 1).all(), "COW lineage must be one summary row per batch"
-    assert int(ln["input_rows"].sum()) == summary["events"]
-
-
 def test_engine_retention_bounds_history(spark, fixture_dir, tmp_path):
     """expire_keep_last: per-batch snapshot retention keeps every engine
     table's manifest count O(keep_last) over the tail — with the final state

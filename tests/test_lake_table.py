@@ -42,26 +42,6 @@ def test_bucket_pruning_reads_only_affected_files(spark, tmp_path):
     assert [r["b"] for r in chk.collect()] == [b0]
 
 
-def test_overwrite_buckets_is_copy_on_write(spark, tmp_path):
-    t = _mk(tmp_path, bucket_count=4)
-    t.append(spark.createDataFrame([(f"k{i}", i) for i in range(40)], "k string, v int"))
-    before_files = {f["path"]: f for f in t.manifest.files}
-    # rewrite bucket 0 only
-    new = spark.createDataFrame([("k0", 999)], "k string, v int").withColumn(
-        "_bucket", F.pmod(F.xxhash64(F.col("k")), F.lit(4)).cast("int")
-    )
-    target_bucket = new.select("_bucket").collect()[0][0]
-    new = new.filter(F.col("_bucket") == target_bucket)
-    t.overwrite_buckets(new, [target_bucket])
-    after = t.manifest.files
-    # untouched buckets keep identical file entries (no rewrite)
-    untouched = [f for f in after if f["bucket"] != target_bucket]
-    assert all(f["path"] in before_files for f in untouched)
-    assert all(f["path"] not in before_files for f in after if f["bucket"] == target_bucket)
-    got = {r["k"]: r["v"] for r in t.read(spark).collect()}
-    assert got["k0"] == 999
-
-
 def test_schema_evolution_add_rename_widen(spark, tmp_path):
     t = _mk(tmp_path)
     t.append(spark.createDataFrame([("a", 1)], "k string, v int"))
@@ -188,23 +168,35 @@ def test_manifest_segmentation_bounds_commit_size(spark, tmp_path, monkeypatch):
     t2.append(df)
     raw2 = _json.load(open(_os.path.join(t2.path, "_meta", f"v{t2.version}.json")))
     assert segs_before <= {s["path"] for s in raw2["file_segments"]}
-    # overwrite of one bucket invalidates only that bucket's segments
+    # folding one bucket invalidates only that bucket's segments: a delta
+    # upsert of k0 (v orders the writes) then a compaction of its bucket
     v_pre = t2.version
-    new = spark.createDataFrame([("k0", 999)], "k string, v int").withColumn(
-        "_bucket", F.pmod(F.xxhash64(F.col("k")), F.lit(2)).cast("int")
-    )
-    b = new.collect()[0]["_bucket"]
-    t2.overwrite_buckets(new.filter(F.col("_bucket") == b), [b])
-    assert {f["bucket"] for f in t2.manifest.files if f["bucket"] == b}  # rewritten
-    # bucket b now holds ONLY k0 (replace semantics); other bucket untouched
-    other = {
+    t2.set_properties({"merge_order_col": "v"})
+    up = spark.createDataFrame([("k0", 999, "upsert")], "k string, v int, _op string")
+    b = up.select(t2.bucket_expr()).collect()[0][0]
+    t2.append_delta(up)
+    files_pre = {f["path"] for f in t2.manifest.files}
+    t2.compact(spark, buckets=[b])
+    raw3 = _json.load(open(_os.path.join(t2.path, "_meta", f"v{t2.version}.json")))
+    segs_after = {s["path"] for s in raw3["file_segments"]}
+    segs_other = {s for s in segs_before if f"-b{1 - b}-" in s}
+    assert segs_other and segs_other <= segs_after
+    assert not {s for s in segs_after if f"-b{b}-" in s}
+    bucket_b = [f for f in t2.manifest.files if f["bucket"] == b]
+    assert bucket_b and all(f["path"] not in files_pre for f in bucket_b)
+    assert all(f["path"] in files_pre for f in t2.manifest.files if f["bucket"] != b)
+    # bucket b now holds ONE resolved row per key, k0's the delta's; the
+    # other bucket keeps its 9 appended copies of each key
+    keys_b = {
         r["k"]
         for r in df.withColumn("_b", F.pmod(F.xxhash64(F.col("k")), F.lit(2)).cast("int"))
-        .filter(F.col("_b") != b)
+        .filter(F.col("_b") == b)
         .collect()
     }
-    live = {r["k"] for r in t2.read(spark).collect()}
-    assert live == other | {"k0"}
+    live = t2.read(spark).collect()
+    assert {r["k"]: r["v"] for r in live}["k0"] == 999
+    assert sorted(r["k"] for r in live if r["k"] in keys_b) == sorted(keys_b)
+    assert len(live) == len(keys_b) + 9 * (40 - len(keys_b))
     # time travel through a segmented manifest still works
     assert t2.read_version(spark, v_pre).count() == 9 * 40
 

@@ -150,22 +150,6 @@ def test_reverse_ops(spark):
     assert rows["delete:z"] == "y"  # non-update: key untouched
 
 
-def test_two_phase_dedup_equals_single_phase(spark):
-    import random
-
-    random.seed(7)
-    rows = [(f"u{random.randrange(20)}", random.random(), i) for i in range(2000)]
-    df = spark.createDataFrame(rows, "url string, v double, lsn long")
-    a = sorted(
-        (r["url"], r["lsn"]) for r in lww_dedup(df, ["url"], "lsn", two_phase=True).collect()
-    )
-    b = sorted(
-        (r["url"], r["lsn"]) for r in lww_dedup(df, ["url"], "lsn", two_phase=False).collect()
-    )
-    assert a == b
-    assert len(a) == 20
-
-
 def test_reverse_ops_custom_key_col(spark):
     # ADVICE r3: the full-before-image path must treat the CONFIGURED key
     # column specially — for a stream keyed on 'id', a reversed delete/update
@@ -198,7 +182,7 @@ def test_maybe_compact_byte_budget_spreads_folds(spark, tmp_path):
             [(f"u{i}", i, 0) for i in range(64)], "url string, v int, last_lsn long"))
         # pile deltas onto every bucket, well past compact_ratio
         ch = _changes(spark, [(f"u{i}", i + 1, "update", 10 + i) for i in range(64)])
-        merge_into(spark, t, ch, mode="mor")
+        merge_into(spark, t, ch)
         return t
 
     def delta_buckets(t):

@@ -55,12 +55,15 @@ def test_bucket_aligned_merge_prep_is_single_shuffle(spark, tmp_path):
     assert "_bucket" in deduped.columns
     assert exchange_count(deduped) == 1
 
-    # and the result is identical to the two-phase window dedup
-    cfg2 = EngineConfig(
-        job_id="ps2", pages_path=pp, changes_path=str(tmp_path / "ch"),
-        dedup_strategy="two_phase",
+    # a table bucketed on another column takes the plain per-key window;
+    # both branches keep the same survivors
+    pp2 = str(tmp_path / "pages_by_lang")
+    LakeTable.create(pp2, PAGES_COLS, bucket_key="lang", bucket_count=8)
+    cfg2 = EngineConfig(job_id="ps2", pages_path=pp2, changes_path=str(tmp_path / "ch"))
+    ref = prepare_changes(
+        LakeTable.load(pp2), spark.read.parquet(str(tmp_path / "ch")), cfg2
     )
-    ref = prepare_changes(pages, spark.read.parquet(str(tmp_path / "ch")), cfg2)
+    assert "_bucket" not in ref.columns
     got = {tuple(r) for r in deduped.drop("_bucket").select("url", "lsn", "op").collect()}
     want = {tuple(r) for r in ref.select("url", "lsn", "op").collect()}
     assert got == want
@@ -138,7 +141,7 @@ def test_resolved_read_is_bucket_aligned_single_shuffle(spark, tmp_path):
         [("u1", 100, "update", 5), ("u2", None, "delete", 6), ("zz", 7, "insert", 7)],
         "url string, v int, op string, lsn long",
     )
-    merge_into(spark, t, ch, mode="mor")
+    merge_into(spark, t, ch)
     resolved = t.read(spark)
     assert exchange_count(resolved) == 1
     txt = explain_str(resolved, "simple").split("== Initial Plan ==")[0]

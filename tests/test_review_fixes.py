@@ -265,7 +265,7 @@ def test_compacted_entries_carry_footer_rows(spark, tmp_path):
 
     t = _seed(spark, tmp_path / "pages", n=20)
     ch = gen_changes(spark, 50, 20, seed=7).drop("fetch_status", "tx_id", "origin")
-    merge_into(spark, t, ch, mode="mor")
+    merge_into(spark, t, ch)
     assert any(f.get("kind") == "delta" for f in t.manifest.files)
     t.compact(spark)
     for f in t.refresh().manifest.files:
