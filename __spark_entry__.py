@@ -908,7 +908,7 @@ def q_url_canonicalize(spark, sf_dir):
     )
 
 
-def q_corpus_decontam(spark, sf_dir):
+def q_corpus_decontam(spark, sf_dir, k: int = 3):
     """Train/eval decontamination, consolidated: the per-eval audit
     (decontaminate: n_shingles/n_matched/overlap_frac/contaminated) and the
     train-side drop list (contaminated_train_docs: n_eval_hit/max_coverage)
@@ -916,7 +916,8 @@ def q_corpus_decontam(spark, sf_dir):
     derived from the documents table itself: 12-word prefixes of every
     37th doc (planted containment -> coverage 1.0) plus synthetic alien
     docs (zero overlap), so both positive and negative paths are
-    value-checked at every sf."""
+    value-checked at every sf.  ``k`` is the shingle width (the board's
+    is 3), matching ``_corpus_decontam_oracle_sql(k=...)``."""
     from ape_dts_spark.operators.text_dedup import (
         contaminated_train_docs,
         decontaminate,
@@ -940,7 +941,7 @@ def q_corpus_decontam(spark, sf_dir):
         ).alias("text"),
     )
     evalset = prefix_evals.unionByName(alien_evals)
-    audit = decontaminate(train, evalset, k=3, threshold=0.5, max_doc_freq=1000).select(
+    audit = decontaminate(train, evalset, k=k, threshold=0.5, max_doc_freq=1000).select(
         F.lit("eval_audit").alias("variant"),
         "doc_id",
         F.col("n_shingles").cast("long").alias("n1"),
@@ -949,7 +950,7 @@ def q_corpus_decontam(spark, sf_dir):
         F.col("contaminated").alias("flag"),
     )
     drops = contaminated_train_docs(
-        train, evalset, k=3, threshold=0.5, max_doc_freq=1000
+        train, evalset, k=k, threshold=0.5, max_doc_freq=1000
     ).select(
         F.lit("train_drop").alias("variant"),
         "doc_id",

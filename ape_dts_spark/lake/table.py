@@ -9,7 +9,7 @@ plain Python + Spark parquet IO:
 
   table_dir/
     _meta/v{N}.json      one immutable manifest per committed snapshot
-    data/...parquet      immutable data files, one bucket each
+    data/v{N}-...        immutable files added by commit N, one bucket each
 
 * **Atomic commit / snapshot isolation** — a manifest is staged to a temp
   file then published with ``os.link`` (fails if the version already
@@ -86,7 +86,8 @@ OP_MARKER_COL = "_op"
 
 
 def spark_type(name: str) -> T.DataType:
-    if name.startswith("decimal"):
+    # decimals and arrays (a sidecar index's signature column) parse as DDL
+    if name.startswith(("decimal", "array")):
         return T._parse_datatype_string(name)
     return _TYPES[name]
 
@@ -592,6 +593,29 @@ class LakeTable:
         base.update(overrides)
         return _Manifest(**base)
 
+    def commit_files(
+        self,
+        added: list[dict],
+        replace_buckets=None,
+        properties: dict[str, str] | None = None,
+    ) -> int:
+        """Commit a file-list change as one new snapshot: drop every live
+        entry of ``replace_buckets`` (a rewrite), append ``added`` and merge
+        ``properties`` — Iceberg's AppendFiles / RewriteFiles.  The one
+        place a file list is changed: appends, compaction and the sidecar
+        indexes all build their snapshot here.  ``added`` entries name
+        files already under ``data/`` with a ``v{version + 1}-`` prefix, so
+        ``expire_snapshots`` never collects them before this commit."""
+        files = self.manifest.files
+        if replace_buckets is not None:
+            bset = set(replace_buckets)
+            files = [f for f in files if f["bucket"] not in bset]
+        props = dict(self.manifest.properties)
+        props.update(properties or {})
+        m = self._next_manifest(files=files + list(added), properties=props)
+        self._publish(m)
+        return m.version
+
     def append(self, df: DataFrame, properties: dict[str, str] | None = None) -> int:
         """Append rows (no dedup).  df columns must match current schema by name."""
         cur = self.schema
@@ -602,11 +626,7 @@ class LakeTable:
             entries = self._stage_write(out, with_bucket_col=True)
         else:
             entries = self._stage_write(out, with_bucket_col=False)
-        props = dict(self.manifest.properties)
-        props.update(properties or {})
-        m = self._next_manifest(files=self.manifest.files + entries, properties=props)
-        self._publish(m)
-        return m.version
+        return self.commit_files(entries, properties=properties)
 
     def append_rows(self, rows: list[tuple], properties: dict[str, str] | None = None) -> int:
         """Driver-side append of a handful of bookkeeping rows (checkpoint /
@@ -642,11 +662,7 @@ class LakeTable:
             "kind": "base",
             "bytes": os.path.getsize(dst),
         }
-        props = dict(self.manifest.properties)
-        props.update(properties or {})
-        m = self._next_manifest(files=self.manifest.files + [entry], properties=props)
-        self._publish(m)
-        return m.version
+        return self.commit_files([entry], properties=properties)
 
     def append_delta(
         self,
@@ -673,16 +689,13 @@ class LakeTable:
             out, with_bucket_col=True, kind="delta", pre_clustered=pre_clustered,
             split_deletes=True,
         )
-        props = dict(self.manifest.properties)
-        props.update(properties or {})
-        m = self._next_manifest(files=self.manifest.files + entries, properties=props)
-        self._publish(m)
+        version = self.commit_files(entries, properties=properties)
         per_bucket: dict[int, dict[str, int]] = {}
         for e in entries:
             d = per_bucket.setdefault(e["bucket"], {"rows": 0, "deletes": 0})
             d["rows"] += e["rows"]
             d["deletes"] += e.get("deletes", 0)
-        return m.version, sorted(per_bucket), per_bucket
+        return version, sorted(per_bucket), per_bucket
 
     def delta_stats(self) -> dict:
         """Per-kind byte totals + per-bucket delta fraction (compaction input).
@@ -760,20 +773,10 @@ class LakeTable:
             ),
         )
         entries = self._stage_write_kinds(out)
-        bset = set(buckets)
-        kept = [f for f in self.manifest.files if f["bucket"] not in bset]
-        props = dict(self.manifest.properties)
-        props.update(properties or {})
-        m = self._next_manifest(files=kept + entries, properties=props)
-        self._publish(m)
-        return m.version
+        return self.commit_files(entries, replace_buckets=buckets, properties=properties)
 
     def set_properties(self, properties: dict[str, str]) -> int:
-        props = dict(self.manifest.properties)
-        props.update(properties)
-        m = self._next_manifest(properties=props)
-        self._publish(m)
-        return m.version
+        return self.commit_files([], properties=properties)
 
     # ---------------------------------------------------------------- DDL
 
@@ -924,7 +927,9 @@ class LakeTable:
                     os.unlink(full)
 
         def _data_v(fn: str):
-            if not (fn.startswith("v") and fn.endswith(".parquet")):
+            # every committed kind under data/ (parquet, index bloom
+            # segments) carries the version prefix
+            if not fn.startswith("v"):
                 return None
             try:
                 return int(fn[1:].split("-", 1)[0])

@@ -8,19 +8,25 @@ the 100-TB historical table" — without rescanning the table per batch.
 this operator extends it to CONTENT identity across keys, the dedup a
 training-data pipeline runs at ingest.)
 
-``ContentIndex`` is a narrow append-only sidecar of content hashes:
+``ContentIndex`` is a narrow append-only sidecar of content hashes, kept
+as a LakeTable (``lake/table.py``) at its own path, with ``n_buckets`` in
+the table properties:
 
 * **data**: parquet rows ``(h: 32-hex md5 of the text bytes, b: bucket,
-  url)``, bucketed by ``b = h mod n_buckets``, committed through a
-  versioned-manifest atomic publish (same ``os.link`` single-winner trick
-  as ``lake/table.py``) — a crashed append leaves unreferenced files,
-  never a torn index.
-* **bloom sidecar**: per append, per bucket, a right-sized bloom segment
+  url)``, bucketed by ``b = h mod n_buckets``; each file is a table entry
+  of bucket ``b``.
+* **bloom segments**: per append, per bucket, a right-sized bloom segment
   (``BITS_PER_KEY`` bits/key, double hashing from two independent 60-bit
-  halves of the md5).  Membership = positive in ANY segment.  Segments
-  stay small because they are sized to their own batch; ``stats()``
-  reports per-bucket segment counts so callers know when to
-  ``rebuild_blooms()`` (one right-sized segment per bucket).
+  halves of the md5), stored under the same ``data/`` as an entry of kind
+  ``bloom`` that no LakeTable reader selects.  Membership = positive in
+  ANY segment of the bucket; ``compact`` folds each bucket's data files and
+  segments into one of each.
+
+Appends and compactions write ``data/v{N}-...`` files from per-bucket
+``applyInPandas`` tasks and commit them with ``LakeTable.commit_files`` —
+the table's one fsynced, ``os.link``-published commit (single winner; a
+losing or crashed writer leaves only unreferenced files, never a torn
+index) — and ``LakeTable.expire_snapshots`` collects superseded files.
 
 ``dedup_batch`` is a two-phase filter, exact by construction:
 
@@ -46,21 +52,26 @@ is a plain anti-join (``tests/test_incremental_dedup.py``).
 
 from __future__ import annotations
 
-import json
 import os
+import uuid
+from collections import Counter
 
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ape_dts_spark.lake.table import LakeTable
+
 #: bloom sizing: 16 bits/key + 7 probes => ~0.2% false-positive rate.
 BITS_PER_KEY = 16
 N_PROBES = 7
 
+#: entry kind of a bloom segment: committed with the data files, selected
+#: by no LakeTable reader
+BLOOM = "bloom"
 
-class CommitConflict(RuntimeError):
-    pass
+_COLS = [("h", "string"), ("b", "int"), ("url", "string")]
 
 
 def content_hash(text_col):
@@ -122,117 +133,90 @@ def _check_segment(blob: bytes, h1: np.ndarray, h2: np.ndarray) -> np.ndarray:
     return bits[pos].all(axis=1)
 
 
-def _vacuum_index(path: str, keep_last: int, file_keys: tuple[str, ...]) -> int:
-    """Sidecar-index GC shared by ContentIndex and NearDupIndex: delete
-    every data/bloom file referenced ONLY by manifests older than the
-    newest ``keep_last`` ones, then those manifests themselves.  Returns
-    the number of data files deleted.
+def _files_by_bucket(table: LakeTable, kind: str = "base") -> dict[int, list[str]]:
+    """Absolute paths of the live entries of one kind, per bucket, in
+    commit order — the driver-side metadata the index reads prune with."""
+    out: dict[int, list[str]] = {}
+    for f in table.manifest.files:
+        if f.get("kind", "base") == kind:
+            out.setdefault(f["bucket"], []).append(os.path.join(table.path, f["path"]))
+    return out
 
-    Safe by construction: a file is deleted only if some OLD manifest
-    references it and NO kept manifest does — in-flight files an appender
-    has written but not yet published are referenced by no manifest and
-    are never touched.  Without this, every auto-compact leaves its
-    superseded generation on disk and a long-running engine's sidecar
-    grows O(index size x compaction count) (r5 ADVICE)."""
-    meta = os.path.join(path, "_meta")
-    versions = sorted(
-        int(f[len("manifest_v") : -len(".json")])
-        for f in os.listdir(meta)
-        if f.startswith("manifest_v")
-    )
-    keep_last = max(1, keep_last)
-    old, kept = versions[:-keep_last], versions[-keep_last:]
-    if not old:
-        return 0
 
-    def _refs(v: int) -> set:
-        with open(os.path.join(meta, f"manifest_v{v}.json")) as fh:
-            m = json.load(fh)
-        out: set = set()
-        for k in file_keys:
-            for paths in m.get(k, {}).values():
-                out.update(paths)
-        return out
+def _entry(table: LakeTable, rel: str, bucket: int, kind: str = "base", **counts) -> dict:
+    """Table entry for a file an index writer task left under ``data/``."""
+    return {
+        "path": rel,
+        "bucket": bucket,
+        "schema_version": table.manifest.current_schema,
+        "kind": kind,
+        "bytes": os.path.getsize(os.path.join(table.path, rel)),
+        **counts,
+    }
 
-    live: set = set()
-    for v in kept:
-        live |= _refs(v)
-    removed = 0
-    for v in old:
-        for p in _refs(v) - live:
-            try:
-                os.unlink(p)
-                removed += 1
-            except FileNotFoundError:
-                pass  # already gone (idempotent re-run)
-        os.unlink(os.path.join(meta, f"manifest_v{v}.json"))
-    return removed
+
+def _index_stats(table: LakeTable, total: str, count: str) -> dict:
+    """An index's stats() from its live data entries: ``total`` sums the
+    entries' ``count`` field; ``max_files_per_bucket`` drives compaction."""
+    data = [f for f in table.manifest.files if f.get("kind", "base") == "base"]
+    per_bucket = Counter(f["bucket"] for f in data)
+    return {
+        total: sum(f[count] for f in data),
+        "version": table.version,
+        "buckets_touched": len(per_bucket),
+        "max_files_per_bucket": max(per_bucket.values(), default=0),
+    }
+
+
+def _bucket_writer(path: str, v: int):
+    """The per-bucket ``applyInPandas`` writer of append and compact: one
+    data file and one bloom segment of distinct hashes, both named for
+    commit ``v``."""
+
+    def _emit(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
+        b = int(key[0])
+        pdf = pdf.drop_duplicates(subset=["h"])
+        # a uuid per file: a concurrent writer racing on the same version
+        # must not overwrite this writer's files before the commit's
+        # os.link decides the single winner
+        name = f"data/v{v}-b{b}-{uuid.uuid4().hex[:8]}"
+        part, bloom = f"{name}.parquet", f"{name}.bloom"
+        pdf[["h", "b", "url"]].to_parquet(os.path.join(path, part), index=False)
+        blob = _build_segment(pdf["h1"].to_numpy(np.int64), pdf["h2"].to_numpy(np.int64))
+        with open(os.path.join(path, bloom), "wb") as fh:
+            fh.write(blob)
+        return pd.DataFrame({"b": [b], "n": [len(pdf)], "part": [part], "bloom": [bloom]})
+
+    return _emit
 
 
 class ContentIndex:
     """Append-only content-hash index with per-bucket bloom segments."""
 
-    def __init__(self, path: str, manifest: dict):
-        self.path = path
-        self.manifest = manifest
+    def __init__(self, table: LakeTable):
+        self.table = table
 
     # -- lifecycle ---------------------------------------------------------
     @staticmethod
     def create(path: str, n_buckets: int = 64) -> "ContentIndex":
-        if ContentIndex.exists(path):
-            raise FileExistsError(f"content index already exists at {path}")
-        os.makedirs(os.path.join(path, "_meta"), exist_ok=True)
-        os.makedirs(os.path.join(path, "data"), exist_ok=True)
-        os.makedirs(os.path.join(path, "bloom"), exist_ok=True)
-        idx = ContentIndex(
-            path,
-            {
-                "version": 0,
-                "n_buckets": n_buckets,
-                "total_keys": 0,
-                # bucket -> [parquet paths];  bucket -> [bloom segment paths]
-                "files": {},
-                "blooms": {},
-            },
-        )
-        idx._publish(idx.manifest)
-        return idx
-
-    @staticmethod
-    def exists(path: str) -> bool:
-        meta = os.path.join(path, "_meta")
-        return os.path.isdir(meta) and any(
-            f.startswith("manifest_v") for f in os.listdir(meta)
+        return ContentIndex(
+            LakeTable.create(path, _COLS, properties={"n_buckets": str(n_buckets)})
         )
 
     @staticmethod
     def load(path: str) -> "ContentIndex":
-        meta = os.path.join(path, "_meta")
-        versions = sorted(
-            int(f[len("manifest_v") : -len(".json")])
-            for f in os.listdir(meta)
-            if f.startswith("manifest_v")
-        )
-        if not versions:
-            raise FileNotFoundError(f"no content index at {path}")
-        with open(os.path.join(meta, f"manifest_v{versions[-1]}.json")) as fh:
-            return ContentIndex(path, json.load(fh))
+        return ContentIndex(LakeTable.load(path))
 
-    def _publish(self, m: dict) -> None:
-        """Single-winner atomic commit (same pattern as LakeTable._publish:
-        write-temp + os.link; EEXIST means a concurrent appender won)."""
-        meta = os.path.join(self.path, "_meta")
-        tmp = os.path.join(meta, f".tmp_manifest_{os.getpid()}_{m['version']}")
-        with open(tmp, "w") as fh:
-            json.dump(m, fh)
-        final = os.path.join(meta, f"manifest_v{m['version']}.json")
-        try:
-            os.link(tmp, final)
-        except FileExistsError:
-            raise CommitConflict(f"manifest v{m['version']} already committed")
-        finally:
-            os.unlink(tmp)
-        self.manifest = m
+    def _commit(self, written: list, replace: bool = False) -> int:
+        """One table commit of the writer tasks' files; ``replace`` swaps
+        out every live entry (compaction)."""
+        t = self.table
+        added = []
+        for r in written:
+            added.append(_entry(t, r["part"], r["b"], rows=r["n"]))
+            added.append(_entry(t, r["bloom"], r["b"], BLOOM, rows=r["n"]))
+        nb = int(t.manifest.properties["n_buckets"])
+        return t.commit_files(added, replace_buckets=range(nb) if replace else None)
 
     # -- write path ---------------------------------------------------------
     def append(self, batch: DataFrame, text_col: str = "text", id_col: str = "url") -> int:
@@ -242,46 +226,22 @@ class ContentIndex:
         per touched bucket, one bloom segment per touched bucket built
         map-side and collected (segments are 2 bytes/key of THIS batch —
         driver traffic is O(batch), never O(index))."""
-        nb = self.manifest["n_buckets"]
-        v = self.manifest["version"] + 1
+        nb = int(self.table.manifest.properties["n_buckets"])
         hashed = (
             _with_hash_cols(batch, text_col, nb)
             .select("h", "b", "h1", "h2", F.col(id_col).cast("string").alias("url"))
             .dropDuplicates(["h"])
         )
-
-        def _emit(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
-            b = int(key[0])
-            # pid in the name: a concurrent appender racing on the same
-            # version must not overwrite this writer's files before the
-            # manifest os.link decides the single winner.
-            part = os.path.join(
-                self.path, "data", f"v{v}_b{b}_{os.getpid()}.parquet"
-            )
-            pdf[["h", "b", "url"]].to_parquet(part, index=False)
-            blob = _build_segment(
-                pdf["h1"].to_numpy(np.int64), pdf["h2"].to_numpy(np.int64)
-            )
-            bpath = os.path.join(
-                self.path, "bloom", f"v{v}_b{b}_{os.getpid()}.bloom"
-            )
-            with open(bpath, "wb") as fh:
-                fh.write(blob)
-            return pd.DataFrame({"b": [b], "n": [len(pdf)], "part": [part], "bloom": [bpath]})
-
         written = (
             hashed.groupBy("b")
-            .applyInPandas(_emit, schema="b int, n long, part string, bloom string")
+            .applyInPandas(
+                _bucket_writer(self.table.path, self.table.version + 1),
+                schema="b int, n long, part string, bloom string",
+            )
             .collect()
         )
-        m = json.loads(json.dumps(self.manifest))
-        m["version"] = v
-        for r in written:
-            m["files"].setdefault(str(r["b"]), []).append(r["part"])
-            m["blooms"].setdefault(str(r["b"]), []).append(r["bloom"])
-            m["total_keys"] += r["n"]
-        self._publish(m)
-        return m["total_keys"]
+        self._commit(written)
+        return self.stats()["total_keys"]
 
     # -- read path ----------------------------------------------------------
     def dedup_batch(
@@ -298,8 +258,8 @@ class ContentIndex:
         or route duplicates (e.g. count-only lineage) without recompute.
         Intra-batch duplicates are NOT collapsed here — compose with
         ``text_dedup.exact_dedup`` when the batch itself may self-dup."""
-        nb = self.manifest["n_buckets"]
-        blooms = {int(b): list(paths) for b, paths in self.manifest["blooms"].items()}
+        nb = int(self.table.manifest.properties["n_buckets"])
+        blooms = _files_by_bucket(self.table, BLOOM)
         hashed = _with_hash_cols(batch, text_col, nb)
         keep = [c for c in hashed.schema.fieldNames() if c not in ("b", "h1", "h2")]
         if not blooms:
@@ -335,16 +295,15 @@ class ContentIndex:
         )
 
         # exact verify: read ONLY the candidate buckets' index files — a
-        # driver-side metadata decision off the manifest's per-bucket
-        # lists.  With a ~0.2% FPR bloom a mostly-fresh batch confirms
+        # driver-side metadata decision off the table's per-bucket
+        # entries.  With a ~0.2% FPR bloom a mostly-fresh batch confirms
         # against a sliver of the index; the join is hash-on-h both
         # sides, AQE-skew-splittable.
         cand_buckets = sorted(
             r["b"] for r in candidates.select("b").distinct().collect()
         )
-        files = [
-            p for b in cand_buckets for p in self.manifest["files"].get(str(b), [])
-        ]
+        data = _files_by_bucket(self.table)
+        files = [p for b in cand_buckets for p in data.get(b, [])]
         if not files:
             fresh = hashed.select(*keep)
             return fresh, fresh.limit(0)
@@ -359,31 +318,23 @@ class ContentIndex:
 
     # -- maintenance ----------------------------------------------------------
     def stats(self) -> dict:
-        segs = [len(v) for v in self.manifest["blooms"].values()]
-        return {
-            "total_keys": self.manifest["total_keys"],
-            "version": self.manifest["version"],
-            "buckets_touched": len(segs),
-            "max_segments_per_bucket": max(segs, default=0),
-        }
+        return _index_stats(self.table, "total_keys", "rows")
 
     def compact(self, spark: SparkSession) -> int:
         """Fold each bucket's N per-append data files into ONE file and its
         bloom segments into one right-sized segment; returns the new
-        manifest version.
+        table version.
 
         Appends add a data file + bloom segment per touched bucket, so a
         per-batch CDC engine accumulates files linearly with batch count —
         verify-joins then pay file listing/footer overhead and the bloom
         check loops over per-batch segments.  One distributed pass (a task
         per bucket re-reads that bucket's files, dropping duplicate hashes)
-        + one atomic manifest publish; superseded files become
-        unreferenced, never a torn index."""
-        m0 = self.manifest
-        v = m0["version"] + 1
-        files = [p for paths in m0["files"].values() for p in paths]
+        + one table commit that replaces every entry; superseded files
+        become unreferenced, never a torn index."""
+        files = [p for ps in _files_by_bucket(self.table).values() for p in ps]
         if not files:
-            return m0["version"]
+            return self.table.version
         rows = spark.read.parquet(*files).select(
             "h",
             "b",
@@ -391,84 +342,12 @@ class ContentIndex:
             (F.conv(F.substring("h", 17, 15), 16, 10).cast("long") * 2 + 1).alias("h2"),
             "url",
         )
-        path = self.path
-
-        def _emit(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
-            b = int(key[0])
-            pdf = pdf.drop_duplicates(subset=["h"])
-            part = os.path.join(path, "data", f"v{v}_b{b}_{os.getpid()}.parquet")
-            pdf[["h", "b", "url"]].to_parquet(part, index=False)
-            blob = _build_segment(
-                pdf["h1"].to_numpy(np.int64), pdf["h2"].to_numpy(np.int64)
-            )
-            bpath = os.path.join(path, "bloom", f"v{v}_b{b}_{os.getpid()}.bloom")
-            with open(bpath, "wb") as fh:
-                fh.write(blob)
-            return pd.DataFrame(
-                {"b": [b], "n": [len(pdf)], "part": [part], "bloom": [bpath]}
-            )
-
         written = (
             rows.groupBy("b")
-            .applyInPandas(_emit, schema="b int, n long, part string, bloom string")
+            .applyInPandas(
+                _bucket_writer(self.table.path, self.table.version + 1),
+                schema="b int, n long, part string, bloom string",
+            )
             .collect()
         )
-        m = json.loads(json.dumps(m0))
-        m["version"] = v
-        m["files"] = {str(r["b"]): [r["part"]] for r in written}
-        m["blooms"] = {str(r["b"]): [r["bloom"]] for r in written}
-        m["total_keys"] = sum(int(r["n"]) for r in written)
-        self._publish(m)
-        return v
-
-    def vacuum(self, keep_last: int = 2) -> int:
-        """Delete files superseded by compaction (see _vacuum_index): keep
-        the newest ``keep_last`` manifest generations, unlink everything
-        only they no longer reference.  The engine calls this after
-        auto-compact when snapshot retention is enabled."""
-        return _vacuum_index(self.path, keep_last, ("files", "blooms"))
-
-    def rebuild_blooms(self, spark: SparkSession) -> int:
-        """Fold each bucket's N segments into one right-sized segment.
-
-        Distributed (one task per bucket re-reads that bucket's data files)
-        — run when max_segments_per_bucket makes the per-batch check's
-        segment loop long (each segment is one small file read per task,
-        so tens are fine, thousands are not)."""
-        nb = self.manifest["n_buckets"]
-        v = self.manifest["version"] + 1
-        files = [p for paths in self.manifest["files"].values() for p in paths]
-        if not files:
-            return self.manifest["version"]
-        rows = (
-            spark.read.parquet(*files)
-            .select(
-                "h",
-                "b",
-                F.conv(F.substring("h", 1, 15), 16, 10).cast("long").alias("h1"),
-                (F.conv(F.substring("h", 17, 15), 16, 10).cast("long") * 2 + 1).alias("h2"),
-            )
-        )
-
-        def _emit(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
-            b = int(key[0])
-            blob = _build_segment(
-                pdf["h1"].to_numpy(np.int64), pdf["h2"].to_numpy(np.int64)
-            )
-            bpath = os.path.join(
-                self.path, "bloom", f"v{v}_b{b}_{os.getpid()}.bloom"
-            )
-            with open(bpath, "wb") as fh:
-                fh.write(blob)
-            return pd.DataFrame({"b": [b], "bloom": [bpath]})
-
-        built = (
-            rows.groupBy("b")
-            .applyInPandas(_emit, schema="b int, bloom string")
-            .collect()
-        )
-        m = json.loads(json.dumps(self.manifest))
-        m["version"] = v
-        m["blooms"] = {str(r["b"]): [r["bloom"]] for r in built}
-        self._publish(m)
-        return v
+        return self._commit(written, replace=True)

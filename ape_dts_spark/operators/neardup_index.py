@@ -23,7 +23,7 @@ Design (the same LSH machinery as the batch path, made persistent):
   table and pay one extra join.
 * **match**: arriving docs compute their band signatures, PRUNE the index
   read to just the buckets those signatures hash into (driver-side
-  metadata decision off the manifest's per-bucket file lists — a
+  metadata decision off the table's per-bucket entries — a
   mostly-novel batch touches a sliver of the index), equi-join on
   ``(band, sig)``, then verify each candidate by the unbiased MinHash
   estimate ``est_jaccard = |matching components| / K`` (pure
@@ -37,9 +37,14 @@ Design (the same LSH machinery as the batch path, made persistent):
   overlap rides only on boilerplate bands fall out — the same documented
   trade as the batch LSH cap, and exact re-crawls are caught by
   ``ContentIndex`` anyway.
-* **commit**: versioned-manifest atomic publish (``os.link``
-  single-winner, same crash contract as ContentIndex/LakeTable: a torn
-  append leaves unreferenced files, never a torn index).
+* **storage and commit**: a LakeTable (``lake/table.py``) at its own
+  path, with ``n_buckets``, ``num_hashes``, ``bands`` and ``k_shingle`` in
+  the table properties.  Each per-bucket writer task leaves a
+  ``data/v{N}-...`` file and the files are committed with
+  ``LakeTable.commit_files`` — the table's one fsynced, ``os.link``-
+  published commit (single winner; a torn append leaves unreferenced
+  files, never a torn index); ``LakeTable.expire_snapshots`` collects
+  superseded files.
 
 Scale story at 10^10 indexed pages: appends shuffle O(batch) band rows
 once; matches read O(batch-distinct band signatures) buckets of the
@@ -57,15 +62,19 @@ so DuckDB mirrors ``match_batch`` end-to-end with plain SQL
 
 from __future__ import annotations
 
-import json
 import os
+import uuid
 
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ape_dts_spark.operators.incremental_dedup import CommitConflict
+from ape_dts_spark.lake.table import LakeTable
+from ape_dts_spark.operators.incremental_dedup import _entry, _files_by_bucket, _index_stats
 from ape_dts_spark.operators.text_dedup import _drop_hot_keys, minhash_signatures_fused
+
+_COLS = [("band", "int"), ("sig", "string"), ("doc_id", "string"), ("mhs", "array<bigint>")]
+_PARAMS = ("n_buckets", "num_hashes", "bands", "k_shingle")
 
 
 def _band_rows(
@@ -105,12 +114,29 @@ def _band_rows(
     )
 
 
+def _bucket_writer(path: str, v: int):
+    """The per-bucket ``applyInPandas`` writer of append and compact: one
+    data file of distinct (doc_id, band, sig) rows named for commit ``v``."""
+
+    def _emit(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
+        b = int(key[0])
+        pdf = pdf.drop_duplicates(subset=["doc_id", "band", "sig"])
+        # a uuid per file: a concurrent writer racing on the same version
+        # must not overwrite this writer's file before the commit decides
+        part = f"data/v{v}-b{b}-{uuid.uuid4().hex[:8]}.parquet"
+        pdf[["band", "sig", "doc_id", "mhs"]].to_parquet(os.path.join(path, part), index=False)
+        # n_docs: band rows / bands is exact only globally; count band-0
+        # rows instead (every sig'd doc emits exactly one band-0 row)
+        return pd.DataFrame({"b": [b], "n0": [int((pdf["band"] == 0).sum())], "part": [part]})
+
+    return _emit
+
+
 class NearDupIndex:
     """Append-only MinHash band-signature index for ingest-time near-dup."""
 
-    def __init__(self, path: str, manifest: dict):
-        self.path = path
-        self.manifest = manifest
+    def __init__(self, table: LakeTable):
+        self.table = table
 
     # -- lifecycle ---------------------------------------------------------
     @staticmethod
@@ -123,58 +149,25 @@ class NearDupIndex:
     ) -> "NearDupIndex":
         if num_hashes % bands != 0:
             raise ValueError("num_hashes must divide evenly into bands")
-        if NearDupIndex.exists(path):
-            raise FileExistsError(f"near-dup index already exists at {path}")
-        os.makedirs(os.path.join(path, "_meta"), exist_ok=True)
-        os.makedirs(os.path.join(path, "data"), exist_ok=True)
-        idx = NearDupIndex(
-            path,
-            {
-                "version": 0,
-                "n_buckets": n_buckets,
-                "num_hashes": num_hashes,
-                "bands": bands,
-                "k_shingle": k_shingle,
-                "total_docs": 0,
-                "files": {},  # bucket -> [parquet paths]
-            },
-        )
-        idx._publish(idx.manifest)
-        return idx
-
-    @staticmethod
-    def exists(path: str) -> bool:
-        meta = os.path.join(path, "_meta")
-        return os.path.isdir(meta) and any(
-            f.startswith("manifest_v") for f in os.listdir(meta)
+        params = dict(n_buckets=n_buckets, num_hashes=num_hashes, bands=bands, k_shingle=k_shingle)
+        return NearDupIndex(
+            LakeTable.create(path, _COLS, properties={k: str(v) for k, v in params.items()})
         )
 
     @staticmethod
     def load(path: str) -> "NearDupIndex":
-        meta = os.path.join(path, "_meta")
-        versions = sorted(
-            int(f[len("manifest_v") : -len(".json")])
-            for f in os.listdir(meta)
-            if f.startswith("manifest_v")
-        )
-        if not versions:
-            raise FileNotFoundError(f"no near-dup index at {path}")
-        with open(os.path.join(meta, f"manifest_v{versions[-1]}.json")) as fh:
-            return NearDupIndex(path, json.load(fh))
+        return NearDupIndex(LakeTable.load(path))
 
-    def _publish(self, m: dict) -> None:
-        meta = os.path.join(self.path, "_meta")
-        tmp = os.path.join(meta, f".tmp_manifest_{os.getpid()}_{m['version']}")
-        with open(tmp, "w") as fh:
-            json.dump(m, fh)
-        final = os.path.join(meta, f"manifest_v{m['version']}.json")
-        try:
-            os.link(tmp, final)
-        except FileExistsError:
-            raise CommitConflict(f"manifest v{m['version']} already committed")
-        finally:
-            os.unlink(tmp)
-        self.manifest = m
+    def _params(self) -> dict[str, int]:
+        return {k: int(self.table.manifest.properties[k]) for k in _PARAMS}
+
+    def _commit(self, written: list, replace: bool = False) -> int:
+        """One table commit of the writer tasks' files; ``replace`` swaps
+        out every live entry (compaction)."""
+        t = self.table
+        added = [_entry(t, r["part"], r["b"], docs=r["n0"]) for r in written]
+        nb = self._params()["n_buckets"]
+        return t.commit_files(added, replace_buckets=range(nb) if replace else None)
 
     # -- signatures --------------------------------------------------------
     def band_rows(
@@ -189,7 +182,7 @@ class NearDupIndex:
         materialize it (``localCheckpoint`` — it is narrow: ~200 bytes x
         bands per doc), and pass it to both via their ``rows=`` parameter,
         halving the per-batch signature cost."""
-        m = self.manifest
+        m = self._params()
         return _band_rows(
             batch, text_col, id_col, m["k_shingle"], m["num_hashes"], m["bands"],
             m["n_buckets"],
@@ -226,35 +219,18 @@ class NearDupIndex:
         hash to the same bucket, so the pandas-side dedup is exact with
         zero extra shuffle and the signatures keep the caller's (parallel)
         partitioning."""
-        m0 = self.manifest
-        v = m0["version"] + 1
         if rows is None:
             rows = self.band_rows(batch, text_col, id_col)
-        path = self.path
-
-        def _emit(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
-            b = int(key[0])
-            pdf = pdf.drop_duplicates(subset=["doc_id", "band", "sig"])
-            part = os.path.join(path, "data", f"v{v}_b{b}_{os.getpid()}.parquet")
-            pdf[["band", "sig", "doc_id", "mhs"]].to_parquet(part, index=False)
-            # n_docs: band rows / bands is exact only globally; count band-0
-            # rows instead (every sig'd doc emits exactly one band-0 row)
-            return pd.DataFrame(
-                {"b": [b], "n0": [int((pdf["band"] == 0).sum())], "part": [part]}
-            )
-
         written = (
             rows.groupBy("b")
-            .applyInPandas(_emit, schema="b int, n0 long, part string")
+            .applyInPandas(
+                _bucket_writer(self.table.path, self.table.version + 1),
+                schema="b int, n0 long, part string",
+            )
             .collect()
         )
-        m = json.loads(json.dumps(m0))
-        m["version"] = v
-        for r in written:
-            m["files"].setdefault(str(r["b"]), []).append(r["part"])
-            m["total_docs"] += int(r["n0"])
-        self._publish(m)
-        return m["total_docs"]
+        self._commit(written)
+        return self.stats()["total_docs"]
 
     # -- read path ---------------------------------------------------------
     def match_batch(
@@ -283,8 +259,8 @@ class NearDupIndex:
         contract the ContentIndex documents (EngineConfig
         ``content_index_path`` notes).  Docs with no shingles are always
         fresh."""
-        m = self.manifest
-        if not m["files"]:
+        data = _files_by_bucket(self.table)
+        if not data:
             return batch, batch.limit(0)
         if rows is None:
             rows = self.band_rows(batch, text_col, id_col)
@@ -293,7 +269,7 @@ class NearDupIndex:
         # prune the index read to the buckets the batch's band sigs hash
         # into — driver-side metadata decision, O(batch distinct sigs)
         need = sorted(r["b"] for r in rows.select("b").distinct().collect())
-        files = [p for b in need for p in m["files"].get(str(b), [])]
+        files = [p for b in need for p in data.get(b, [])]
         if not files:
             return batch, batch.limit(0)
         idx = spark.read.parquet(*files).select(
@@ -305,7 +281,7 @@ class NearDupIndex:
             # slice holds whole buckets
             idx = _drop_hot_keys(idx, ["band", "sig"], max_bucket)
 
-        K = m["num_hashes"]
+        K = self._params()["num_hashes"]
         est = (
             F.size(F.filter(F.zip_with("mhs", "_imhs", lambda x, y: x == y), lambda v: v))
             / F.lit(float(K))
@@ -342,70 +318,36 @@ class NearDupIndex:
     # -- maintenance -------------------------------------------------------
     def compact(self, spark: SparkSession) -> int:
         """Fold each bucket's N per-append files into ONE file; returns the
-        new manifest version.
+        new table version.
 
         Every append adds a file per touched bucket, so a per-batch CDC
         engine accumulates files linearly with batch count (10k batches x
         64 buckets = 640k small files) — the per-match read then pays file
         listing/footer overhead instead of data.  Compaction is one
         distributed pass (a task per bucket re-reads that bucket's files,
-        collapsing repeated (doc_id, band, sig) generations) and one atomic
-        manifest publish; superseded files become unreferenced, never a
-        torn index (``vacuum()`` deletes them once no reader can hold the
-        old manifest).  Run when stats()['max_files_per_bucket'] makes
-        match latency file-bound — tens are fine, thousands are not."""
-        m0 = self.manifest
-        v = m0["version"] + 1
-        files = [p for paths in m0["files"].values() for p in paths]
+        collapsing repeated (doc_id, band, sig) generations) and one table
+        commit that replaces every entry; superseded files become
+        unreferenced, never a torn index (``LakeTable.expire_snapshots``
+        deletes them once no kept snapshot names them).  Run when
+        stats()['max_files_per_bucket'] makes match latency file-bound —
+        tens are fine, thousands are not."""
+        files = [p for ps in _files_by_bucket(self.table).values() for p in ps]
         if not files:
-            return m0["version"]
+            return self.table.version
         rows = spark.read.parquet(*files).withColumn(
             "b",
-            F.pmod(F.xxhash64(F.col("band"), F.col("sig")), F.lit(m0["n_buckets"]))
+            F.pmod(F.xxhash64(F.col("band"), F.col("sig")), F.lit(self._params()["n_buckets"]))
             .cast("int"),
         )
-        path = self.path
-
-        def _emit(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
-            b = int(key[0])
-            pdf = pdf.drop_duplicates(subset=["doc_id", "band", "sig"])
-            part = os.path.join(path, "data", f"v{v}_b{b}_{os.getpid()}.parquet")
-            pdf[["band", "sig", "doc_id", "mhs"]].to_parquet(part, index=False)
-            return pd.DataFrame(
-                {"b": [b], "n0": [int((pdf["band"] == 0).sum())], "part": [part]}
-            )
-
         written = (
             rows.groupBy("b")
-            .applyInPandas(_emit, schema="b int, n0 long, part string")
+            .applyInPandas(
+                _bucket_writer(self.table.path, self.table.version + 1),
+                schema="b int, n0 long, part string",
+            )
             .collect()
         )
-        m = json.loads(json.dumps(m0))
-        m["version"] = v
-        m["files"] = {str(r["b"]): [r["part"]] for r in written}
-        m["total_docs"] = sum(int(r["n0"]) for r in written)
-        self._publish(m)
-        return v
-
-    def vacuum(self, keep_last: int = 2) -> int:
-        """Delete files superseded by compaction: keep the newest
-        ``keep_last`` manifest generations, unlink everything only they no
-        longer reference (shared helper — see
-        incremental_dedup._vacuum_index).  The engine calls this after
-        auto-compact when snapshot retention is enabled."""
-        from ape_dts_spark.operators.incremental_dedup import _vacuum_index
-
-        return _vacuum_index(self.path, keep_last, ("files",))
+        return self._commit(written, replace=True)
 
     def stats(self) -> dict:
-        files = [len(v) for v in self.manifest["files"].values()]
-        return {
-            "total_docs": self.manifest["total_docs"],
-            "version": self.manifest["version"],
-            "buckets_touched": len(files),
-            "max_files_per_bucket": max(files, default=0),
-            "params": {
-                k: self.manifest[k]
-                for k in ("num_hashes", "bands", "k_shingle", "n_buckets")
-            },
-        }
+        return {**_index_stats(self.table, "total_docs", "docs"), "params": self._params()}

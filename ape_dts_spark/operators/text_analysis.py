@@ -537,14 +537,15 @@ def doc_chunk(
             F.least(F.lit(chunk_words).cast("long"), n - c * stride).alias("n_words"),
         ),
     )
-    # emptiness guard as the cheap codegen predicate on the raw text
-    # (non-empty trimmed text <=> at least one non-empty token): filtering
-    # on size(_w) would be substituted below _spread's repartition and
-    # re-evaluate the interpreted words expression on the un-spread input
-    # (see text_dedup.word_shingles)
+    # emptiness guard as the cheap codegen predicate on the raw text (a
+    # non-whitespace character <=> at least one non-empty token; Spark's
+    # trim strips only spaces, so a tab-only text trims non-empty):
+    # filtering on size(_w) would be substituted below _spread's
+    # repartition and re-evaluate the interpreted words expression on the
+    # un-spread input (see text_dedup.word_shingles)
     return (
         _spread(docs)
-        .filter(F.length(F.trim(F.col(text_col))) > 0)
+        .filter(F.col(text_col).rlike(r"\S"))
         .select(F.col(id_col), words.alias("_w"))
         .select(F.col(id_col), F.explode(chunks).alias("_c"))
         .select(
@@ -598,13 +599,14 @@ def winnowing_fingerprints(
         F.transform(wins, lambda j: F.array_min(F.slice(F.col("_h"), j + 1, window)))
     )
     # the >=k-words guard as cheap codegen predicates on the raw text:
-    # for non-empty trimmed text the split yields exactly the non-empty
-    # words, so its size equals size(_w); filtering on size(_w) itself
-    # would be substituted below _spread's repartition and re-evaluate the
-    # interpreted words expression there (see text_dedup.word_shingles)
-    enough = (F.length(F.trim(F.col(text_col))) > 0) & (
-        F.size(F.split(F.lower(F.trim(F.col(text_col))), r"\s+")) >= k
-    )
+    # once leading/trailing whitespace of any kind is stripped (trim strips
+    # only spaces), the split of text holding a non-whitespace character
+    # yields exactly the non-empty words, so its size equals size(_w);
+    # filtering on size(_w) itself would be substituted below _spread's
+    # repartition and re-evaluate the interpreted words expression there
+    # (see text_dedup.word_shingles)
+    stripped = F.regexp_replace(F.col(text_col), r"^\s+|\s+$", "")
+    enough = F.col(text_col).rlike(r"\S") & (F.size(F.split(stripped, r"\s+")) >= k)
     return (
         _spread(docs)
         .filter(enough)

@@ -155,6 +155,20 @@ def _shingle_array(text_col, k: int):
     return F.filter(F.array_distinct(shingle_at), lambda s: F.length(s) > 0)
 
 
+def _has_shingles(text_col, k: int):
+    """``size(_shingle_array(text_col, k)) > 0`` as a cheap codegen
+    predicate on the text itself.  At k=1 a shingle is one word, so the
+    text needs a non-whitespace character (Spark's ``trim`` strips only
+    spaces: a tab-only text trims non-empty yet holds no word).  At k>=2 a
+    text whose trim is non-empty always qualifies: it splits into one
+    non-empty word, or into two or more tokens whose join carries a
+    separator — even whitespace-only text yields the shingle ' ', in Spark
+    and in the DuckDB oracles alike."""
+    if k == 1:
+        return text_col.rlike(r"\S")
+    return F.length(F.trim(text_col)) > 0
+
+
 def word_shingles(docs: DataFrame, id_col: str, text_col: str, k: int = 3) -> DataFrame:
     """Distinct k-word shingles per document (JVM-side: split + transform + explode).
 
@@ -338,16 +352,13 @@ def ngram_jaccard_pairs(
     # set sizes fused per doc (size of the distinct-shingle array) — same
     # value as counting sh's rows per doc, without that groupBy's shuffle.
     # The emptiness guard is the CHEAP equivalent predicate on the text
-    # itself, applied BEFORE the projection: ``size(shingles) > 0`` iff the
-    # trimmed text is non-empty (split of a non-empty trim yields only
-    # non-empty words, so the first shingle is non-empty; NULL/blank text
-    # yields only the empty shingle, which the array filter drops).
-    # Filtering on the aliased size column instead re-evaluates the whole
-    # interpreted shingle expression below the repartition (see
-    # word_shingles docstring).
+    # itself (_has_shingles), applied BEFORE the projection.  Filtering on
+    # the aliased size column instead re-evaluates the whole interpreted
+    # shingle expression below the repartition (see word_shingles
+    # docstring).
     sizes = (
         _spread(docs)
-        .filter(F.length(F.trim(F.col(text_col))) > 0)
+        .filter(_has_shingles(F.col(text_col), k))
         .select(F.col(id_col), F.size(_shingle_array(F.col(text_col), k)).alias("n"))
     )
     if max_doc_freq is not None:
@@ -509,11 +520,11 @@ def decontaminate(
         train_vocab = train_sh.select("shingle").distinct()
     eval_sh = word_shingles(evalset, id_col, text_col, k)
     # cheap equivalent emptiness guard BEFORE the size projection (see the
-    # ngram_jaccard_pairs sizes comment): non-empty trimmed text <=> at
-    # least one non-empty shingle
+    # ngram_jaccard_pairs sizes comment); without it a text with no
+    # shingle divides by n_shingles = 0
     sizes = (
         _spread(evalset)
-        .filter(F.length(F.trim(F.col(text_col))) > 0)
+        .filter(_has_shingles(F.col(text_col), k))
         .select(F.col(id_col), F.size(_shingle_array(F.col(text_col), k)).alias("n_shingles"))
     )
     matched = (
@@ -573,7 +584,7 @@ def contaminated_train_docs(
     )
     eval_sizes = (
         _spread(evalset)
-        .filter(F.length(F.trim(F.col(text_col))) > 0)
+        .filter(_has_shingles(F.col(text_col), k))
         .select(
             F.col(id_col).alias("_eid"),
             F.size(_shingle_array(F.col(text_col), k)).alias("_esz"),

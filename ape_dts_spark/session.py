@@ -11,6 +11,22 @@ import os
 from pyspark.sql import SparkSession
 
 
+def _driver_memory_mb() -> int:
+    """3/8 of the smaller of physical memory and the cgroup limit, within
+    [1 GB, 16 GB] (6 GB on a 16 GB host): the local JVM gets a heap the host
+    can back, and the rest is left to Python workers and the page cache."""
+    mem = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") >> 20
+    for path in ("/sys/fs/cgroup/memory.max", "/sys/fs/cgroup/memory/memory.limit_in_bytes"):
+        try:
+            with open(path) as fh:
+                raw = fh.read().strip()
+        except OSError:
+            continue
+        if raw.isdigit():
+            mem = min(mem, int(raw) >> 20)
+    return max(1024, min(mem * 3 // 8, 16 << 10))
+
+
 def get_spark(
     app_name: str = "ape-dts-spark",
     master: str | None = None,
@@ -52,9 +68,12 @@ def get_spark(
         .config("spark.sql.parquet.compression.codec", "zstd")
         .config("spark.io.compression.codec", "zstd")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
-        # 32 concurrent tasks over html-heavy rows need real heap headroom —
-        # an 8g heap GC-thrashes at local[32] and inverts core scaling
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "48g"))
+        # host-sized heap (SPARK_DRIVER_MEM overrides): a fixed large
+        # default promises more memory than a small host can back
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_DRIVER_MEM") or f"{_driver_memory_mb()}m",
+        )
         .config(
             "spark.driver.extraJavaOptions",
             f"-XX:ParallelGCThreads={gc_threads} -XX:ConcGCThreads={max(1, gc_threads // 4)}",

@@ -149,10 +149,11 @@ class EngineConfig:
     # metadata listing and storage O(keep_last), not O(batches).
     expire_keep_last: int = 0
     # OPTIONAL ingest-time content dedup (operators/incremental_dedup.py
-    # ContentIndex): when set, each batch's surviving INSERT rows whose
-    # extracted text already exists anywhere in the index are dropped
-    # BEFORE the MERGE (and before feed emission), and the remaining fresh
-    # inserts' hashes are appended to the index AFTER the merge commits.
+    # ContentIndex, a LakeTable of md5 rows + bloom segments at this path):
+    # when set, each batch's surviving INSERT rows whose extracted text
+    # already exists anywhere in the index are dropped BEFORE the MERGE
+    # (and before feed emission), and the remaining fresh inserts' hashes
+    # are appended to the index AFTER the merge commits.
     # This deliberately changes replication semantics (content-identity
     # dedup across keys — the curation knob a training-corpus ingest wants),
     # so it is OFF by default; parity/replay-equality runs keep it off.
@@ -167,9 +168,10 @@ class EngineConfig:
     content_index_path: str | None = None
     content_index_buckets: int = 64
     # OPTIONAL ingest-time NEAR-dup dedup (operators/neardup_index.py
-    # NearDupIndex): the MinHash analog of content_index_path for content
-    # that re-arrives ALMOST identical (trailing timestamps, rotated ads)
-    # and defeats md5 equality.  INSERT rows whose text matches any indexed
+    # NearDupIndex, a LakeTable of band signatures at this path): the
+    # MinHash analog of content_index_path for content that re-arrives
+    # ALMOST identical (trailing timestamps, rotated ads) and defeats md5
+    # equality.  INSERT rows whose text matches any indexed
     # page at est_jaccard >= near_dup_threshold are dropped before the
     # MERGE; the surviving inserts' signatures are appended AFTER the merge
     # commits (same best-effort crash window as the content index — a
@@ -183,12 +185,13 @@ class EngineConfig:
     # hot band-signature cap forwarded to NearDupIndex.match_batch
     near_dup_max_bucket: int = 64
     # auto-compact either sidecar index when any bucket accumulates more
-    # than this many per-append files/segments (every batch appends one per
+    # than this many per-append data files (every batch appends one per
     # touched bucket, so file count otherwise grows linearly with batch
     # count — 10k batches x 64 buckets = 640k small files and the match
     # read becomes listing/footer-bound).  Compaction is one distributed
-    # pass + one atomic manifest publish, same crash contract as appends.
-    # 0 disables.
+    # pass + one LakeTable commit, same crash contract as appends; with
+    # expire_keep_last > 0 the index table's expire_snapshots then deletes
+    # the superseded files.  0 disables.
     index_compact_max_files: int = 64
     # catalog directory for in-stream table-lifecycle DDL (reference
     # ddl_type.rs:7-36 CreateTable/DropTable/RenameTable/Create+DropDatabase,
@@ -457,7 +460,7 @@ class CdcEngine:
 
             self._cidx = (
                 ContentIndex.load(cfg.content_index_path)
-                if ContentIndex.exists(cfg.content_index_path)
+                if LakeTable.exists(cfg.content_index_path)
                 else ContentIndex.create(
                     cfg.content_index_path, n_buckets=cfg.content_index_buckets
                 )
@@ -468,7 +471,7 @@ class CdcEngine:
 
             self._ndidx = (
                 NearDupIndex.load(cfg.near_dup_index_path)
-                if NearDupIndex.exists(cfg.near_dup_index_path)
+                if LakeTable.exists(cfg.near_dup_index_path)
                 else NearDupIndex.create(
                     cfg.near_dup_index_path, n_buckets=cfg.near_dup_buckets
                 )
@@ -787,10 +790,12 @@ class CdcEngine:
 
     # ------------------------------------------------------------- one batch
 
-    def _content_filter(self, deduped):
+    def _content_filter(self, deduped, checkpoints: list):
         """(filtered, fresh_inserts, n_dropped): drop INSERT rows whose text
         the ContentIndex has already seen; updates/deletes pass through.
-        Exact by construction (md5 equality; the bloom only prunes)."""
+        Exact by construction (md5 equality; the bloom only prunes).  The
+        checkpointed drop keys go on ``checkpoints`` for the caller to
+        release once the batch is done."""
         cfg = self.cfg
         if "text" not in deduped.columns:
             raise ValueError(
@@ -808,6 +813,7 @@ class CdcEngine:
         # join in the output lineage re-runs it on every downstream action
         # (feed, merge's jobs, the index append, metrics counts)
         drop_keys = dups.select(cfg.key_col).localCheckpoint()
+        checkpoints.append(drop_keys)
         n_dropped = drop_keys.count()  # checkpoint already materialized
         filtered = deduped.join(drop_keys, cfg.key_col, "left_anti").select(
             *deduped.columns
@@ -815,7 +821,7 @@ class CdcEngine:
         fresh = filtered.filter(is_candidate)
         return filtered, fresh, n_dropped
 
-    def _near_dup_filter(self, deduped):
+    def _near_dup_filter(self, deduped, checkpoints: list):
         """(filtered, fresh_inserts, n_dropped): drop INSERT rows whose text
         near-dups anything in the NearDupIndex at the configured threshold;
         updates/deletes pass through (key identity governs them).
@@ -827,7 +833,8 @@ class CdcEngine:
         already-pinned batch.  Leaving the match join in the output lineage
         would re-run it on EVERY downstream action (feed emit, merge's
         several jobs, the post-merge append, metrics counts) — measured as
-        a many-minute stall per batch before this shape."""
+        a many-minute stall per batch before this shape.  Both checkpointed
+        frames go on ``checkpoints`` for the caller to release."""
         cfg = self.cfg
         if "text" not in deduped.columns:
             raise ValueError(
@@ -844,6 +851,7 @@ class CdcEngine:
         rows = self._ndidx.band_rows(
             inserts, text_col="text", id_col=cfg.key_col
         ).localCheckpoint()
+        checkpoints.append(rows)
         _, dups = self._ndidx.match_batch(
             self.spark,
             inserts,
@@ -856,6 +864,7 @@ class CdcEngine:
         # the prepared batch is LWW-deduped per key, so the key alone
         # identifies the dropped insert rows
         drop_keys = dups.select(cfg.key_col).localCheckpoint()
+        checkpoints.append(drop_keys)
         n_dropped = drop_keys.count()  # checkpoint already materialized
         filtered = deduped.join(drop_keys, cfg.key_col, "left_anti").select(
             *deduped.columns
@@ -893,11 +902,14 @@ class CdcEngine:
 
         cd_fresh = nd_fresh = nd_rows = None
         cd_dropped = nd_dropped = 0
-        # every persist() in this batch is released in the finally below:
-        # an exception between a pin and its unpersist (content filter
-        # validation, feed emit, a merge CommitConflict) must not leave the
-        # frame registered in the CacheManager for the session's lifetime
+        # every persist() and localCheckpoint() in this batch is released in
+        # the finally below: an exception between a pin and its unpersist
+        # (content filter validation, feed emit, a merge CommitConflict)
+        # must not leave the frame registered in the CacheManager, and a
+        # checkpoint's blocks would otherwise stay until a JVM GC happens
+        # to collect the frame
         pinned: list = []
+        checkpoints: list = []
         try:
             if self._cidx is not None and not already_applied:
                 # persist the prepared batch: the bloom/verify classification
@@ -905,7 +917,7 @@ class CdcEngine:
                 # a pin each pass would re-run the extraction UDF over the html
                 deduped = deduped.persist()
                 pinned.append(deduped)
-                deduped, cd_fresh, cd_dropped = self._content_filter(deduped)
+                deduped, cd_fresh, cd_dropped = self._content_filter(deduped, checkpoints)
             if self._ndidx is not None and not already_applied:
                 # pin for the same reason as the exact filter (the match and
                 # the post-merge append both re-read the batch); when the
@@ -913,7 +925,7 @@ class CdcEngine:
                 # bloom/verify work is not re-run either
                 deduped = deduped.persist()
                 pinned.append(deduped)
-                deduped, nd_fresh, nd_rows, nd_dropped = self._near_dup_filter(deduped)
+                deduped, nd_fresh, nd_rows, nd_dropped = self._near_dup_filter(deduped, checkpoints)
 
             t_prep = time.monotonic() - t0
             t_feed = 0.0
@@ -953,29 +965,18 @@ class CdcEngine:
                 # bounded index maintenance (the sidecar analog of the lake's
                 # maybe_compact): fold per-append files once any bucket's
                 # count exceeds the cap, so match/verify reads stay
-                # data-bound instead of file-listing-bound over a long tail
-                if cfg.index_compact_max_files > 0:
-                    # after a successful compact publish, drop the
-                    # generations it superseded when retention is on (same
-                    # knob as the lake's snapshot GC) — otherwise a
-                    # long-running engine's sidecar dirs grow
-                    # O(index x compaction count) (r5 ADVICE)
+                # data-bound instead of file-listing-bound over a long tail;
+                # after a compaction the snapshot GC drops the generations
+                # it superseded when retention is on (the lake tables' knob)
+                for idx in (self._cidx, self._ndidx):
                     if (
-                        self._cidx is not None
-                        and self._cidx.stats()["max_segments_per_bucket"]
-                        > cfg.index_compact_max_files
+                        idx is not None
+                        and cfg.index_compact_max_files > 0
+                        and idx.stats()["max_files_per_bucket"] > cfg.index_compact_max_files
                     ):
-                        self._cidx.compact(self.spark)
+                        idx.compact(self.spark)
                         if cfg.expire_keep_last > 0:
-                            self._cidx.vacuum(keep_last=cfg.expire_keep_last)
-                    if (
-                        self._ndidx is not None
-                        and self._ndidx.stats()["max_files_per_bucket"]
-                        > cfg.index_compact_max_files
-                    ):
-                        self._ndidx.compact(self.spark)
-                        if cfg.expire_keep_last > 0:
-                            self._ndidx.vacuum(keep_last=cfg.expire_keep_last)
+                            idx.table.expire_snapshots(keep_last=cfg.expire_keep_last)
                 # Observation.get BLOCKS FOREVER when the CollectMetrics node ran
                 # zero tasks (a plan the optimizer collapses to an empty relation
                 # never resolves it) — an `except` around .get can't catch a hang.
@@ -1024,6 +1025,12 @@ class CdcEngine:
         finally:
             for _p in pinned:
                 _p.unpersist()
+            # a local checkpoint's blocks belong to the RDD its LogicalRDD
+            # wraps; dropping them leaves every plan as is (the context
+            # call skips RDD.unpersist's lost-lineage warning)
+            sc = self.spark.sparkContext._jsc.sc()
+            for _c in checkpoints:
+                sc.unpersistRDD(_c._jdf.queryExecution().analyzed().rdd().id(), False)
         self._hook("post_merge", batch_id)
 
         t_merge = time.monotonic() - t0 - t_prep - t_feed

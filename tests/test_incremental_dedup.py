@@ -5,10 +5,13 @@ mirrors it with a plain semi/anti-join on md5(text); the bloom sidecar is
 an optimization that must never change the output.
 """
 
+import os
+
 import duckdb
 import pytest
 from pyspark.sql import functions as F
 
+from ape_dts_spark.lake.table import CommitConflict, LakeTable
 from ape_dts_spark.operators.incremental_dedup import (
     BITS_PER_KEY,
     ContentIndex,
@@ -90,21 +93,6 @@ def test_append_is_incremental_and_idempotent_recheck(spark, tmp_path):
     assert idx.stats()["total_keys"] >= before
 
 
-def test_rebuild_blooms_folds_segments_without_changing_results(spark, tmp_path):
-    docs = _docs(spark)
-    idx = ContentIndex.create(str(tmp_path / "idx"), n_buckets=4)
-    idx.append(docs.filter("CAST(url AS BIGINT) % 4 = 0"))
-    idx.append(docs.filter("CAST(url AS BIGINT) % 4 = 1"))
-    assert idx.stats()["max_segments_per_bucket"] == 2
-
-    batch = docs.filter("CAST(url AS BIGINT) % 2 = 0")
-    before = {r["url"] for r in idx.dedup_batch(spark, batch)[1].collect()}
-    idx.rebuild_blooms(spark)
-    assert idx.stats()["max_segments_per_bucket"] == 1
-    after = {r["url"] for r in idx.dedup_batch(spark, batch)[1].collect()}
-    assert before == after and before
-
-
 def test_bloom_segment_no_false_negatives_and_low_fpr():
     import numpy as np
 
@@ -125,23 +113,42 @@ def test_create_refuses_existing_index(tmp_path):
         ContentIndex.create(str(tmp_path / "idx"))
 
 
+def test_commit_conflict_single_winner(spark, tmp_path):
+    docs = _docs(spark)
+    ContentIndex.create(str(tmp_path / "cidx"), n_buckets=2)
+    a = ContentIndex.load(str(tmp_path / "cidx"))
+    b = ContentIndex.load(str(tmp_path / "cidx"))
+    a.append(docs.filter("CAST(url AS BIGINT) % 7 = 0"))
+    with pytest.raises(CommitConflict):
+        b.append(docs.filter("CAST(url AS BIGINT) % 7 = 1"))
+    # the losing append's files are unreferenced; the index reloads with
+    # the winner's keys only
+    won = ContentIndex.load(str(tmp_path / "cidx"))
+    assert won.stats()["total_keys"] == a.stats()["total_keys"] > 0
+    _, dups = won.dedup_batch(spark, docs.filter("CAST(url AS BIGINT) % 7 = 1"))
+    winner_texts = {r["text"] for r in docs.filter("CAST(url AS BIGINT) % 7 = 0").collect()}
+    assert {r["text"] for r in dups.collect()} <= winner_texts
+
+
 def test_compact_folds_files_and_preserves_membership(spark, tmp_path):
     docs = _docs(spark)
     idx = ContentIndex.create(str(tmp_path / "cidx"), n_buckets=4)
     for m in (2, 3):  # overlapping appends -> duplicate hash generations
         idx.append(docs.filter(f"CAST(url AS BIGINT) % {m} = 0"))
     pre = idx.stats()
-    assert pre["max_segments_per_bucket"] > 1
+    assert pre["max_files_per_bucket"] > 1
     batch = docs.filter("CAST(url AS BIGINT) % 5 = 0")
     _, pre_dups = idx.dedup_batch(spark, batch)
     pre_set = {r["url"] for r in pre_dups.collect()}
 
     v = idx.compact(spark)
     post = idx.stats()
-    assert post["max_segments_per_bucket"] == 1
+    assert post["max_files_per_bucket"] == 1
     assert post["version"] == v
+    # one bloom segment per bucket as well
+    blooms = [f["bucket"] for f in idx.table.manifest.files if f["kind"] == "bloom"]
+    assert sorted(blooms) == sorted(set(blooms))
     # duplicate generations collapsed to distinct hashes
-    import duckdb
     con = duckdb.connect()
     want = con.execute(
         f"SELECT count(DISTINCT md5(text)) FROM read_parquet('{SF}/documents.parquet') "
@@ -151,22 +158,28 @@ def test_compact_folds_files_and_preserves_membership(spark, tmp_path):
     _, post_dups = idx.dedup_batch(spark, batch)
     assert {r["url"] for r in post_dups.collect()} == pre_set
 
-    # vacuum(keep_last=1) unlinks the superseded pre-compact generation's
-    # data+bloom files and manifests, and membership is unchanged (r5
-    # ADVICE: without GC the sidecar grows O(index x compaction count))
-    import os
+    # the index is a plain LakeTable: only _meta/ and data/, and a table
+    # read of it sees every indexed hash once
+    path = str(tmp_path / "cidx")
+    assert sorted(os.listdir(path)) == ["_meta", "data"]
+    assert LakeTable.load(path).read(spark).count() == want
 
-    data_before = set(os.listdir(tmp_path / "cidx" / "data"))
-    removed = idx.vacuum(keep_last=1)
-    assert removed > 0
-    data_after = set(os.listdir(tmp_path / "cidx" / "data"))
-    assert data_after < data_before
-    live = {os.path.basename(p) for ps in idx.manifest["files"].values() for p in ps}
-    assert live <= data_after
-    manifests = [
-        f for f in os.listdir(tmp_path / "cidx" / "_meta") if f.startswith("manifest_v")
-    ]
-    assert manifests == [f"manifest_v{idx.manifest['version']}.json"]
+    # expire_snapshots(keep_last=1) deletes the superseded pre-compact
+    # parquet files and bloom segments but keeps a file a writer has left
+    # for the next commit; membership is unchanged (without GC the sidecar
+    # grows O(index x compaction count))
+    data = os.path.join(path, "data")
+    in_flight = os.path.join(data, f"v{v + 1}-b0-inflight.bloom")
+    open(in_flight, "wb").close()
+    before = set(os.listdir(data))
+    assert any(f.endswith(".bloom") for f in before)
+    report = idx.table.expire_snapshots(keep_last=1)
+    after = set(os.listdir(data))
+    live = {os.path.basename(f["path"]) for f in idx.table.manifest.files}
+    assert after == live | {os.path.basename(in_flight)}
+    gone = before - after
+    assert any(f.endswith(".parquet") for f in gone) and any(f.endswith(".bloom") for f in gone)
+    assert report["deleted_files"] == len(gone)
     _, vac_dups = idx.dedup_batch(spark, batch)
     assert {r["url"] for r in vac_dups.collect()} == pre_set
-    assert idx.vacuum(keep_last=1) == 0  # idempotent
+    assert idx.table.expire_snapshots(keep_last=1)["deleted_files"] == 0  # idempotent

@@ -184,6 +184,40 @@ def test_combined_with_content_index(spark, tmp_path):
     assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
 
 
+def test_batches_release_their_checkpoints(spark, tmp_path):
+    """Three batches with both indexes on leave no persistent RDD behind:
+    each batch releases its checkpointed drop keys and band rows (and its
+    pinned frames) itself, without waiting for a JVM GC.  One bucket per
+    index makes every batch past the first compact and expire both index
+    tables, so the data directories end holding only live files."""
+    import os
+
+    pages, cfg = _setup(
+        spark,
+        tmp_path,
+        EVENTS,
+        content_index_path=str(tmp_path / "cidx"),
+        content_index_buckets=1,
+        near_dup_index_path=str(tmp_path / "ndidx"),
+        near_dup_buckets=1,
+        near_dup_threshold=0.5,
+        index_compact_max_files=1,
+        expire_keep_last=1,
+    )
+    jsc = spark.sparkContext._jsc
+    before = set(jsc.getPersistentRDDs().keys())
+    eng = CdcEngine(spark, cfg)
+    eng.run()
+    assert len([b for b in eng.batch_log if not b["skipped_merge"]]) == 3
+    assert set(jsc.getPersistentRDDs().keys()) - before == set()
+    assert eng._cidx.stats()["total_keys"] == 3
+    assert eng._ndidx.stats()["total_docs"] == 3
+    for idx in (eng._cidx, eng._ndidx):
+        assert sorted(os.listdir(idx.table.path)) == ["_meta", "data"]
+        live = {os.path.basename(f["path"]) for f in idx.table.manifest.files}
+        assert set(os.listdir(os.path.join(idx.table.path, "data"))) == live
+
+
 def test_requires_text_column(spark, tmp_path):
     pages, cfg = _setup(
         spark,

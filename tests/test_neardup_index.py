@@ -9,7 +9,7 @@ import duckdb
 import pytest
 from pyspark.sql import functions as F
 
-from ape_dts_spark.operators.incremental_dedup import CommitConflict
+from ape_dts_spark.lake.table import CommitConflict, LakeTable
 from ape_dts_spark.operators.neardup_index import NearDupIndex
 from ape_dts_spark.operators.text_dedup import MINHASH_PRIME, minhash_params
 
@@ -225,17 +225,17 @@ def test_compact_folds_files_and_preserves_matches(spark, tmp_path):
     idx2 = NearDupIndex.load(str(tmp_path / "ndi"))
     assert idx2.stats()["total_docs"] == 12
 
-    # vacuum(keep_last=1) drops the superseded pre-compact files/manifests;
-    # matches unchanged (r5 ADVICE)
+    # expire_snapshots(keep_last=1) drops the superseded pre-compact files
+    # and snapshots; matches unchanged
     import os
 
-    assert idx.vacuum(keep_last=1) > 0
-    live = {os.path.basename(p) for ps in idx.manifest["files"].values() for p in ps}
-    assert live <= set(os.listdir(tmp_path / "ndi" / "data"))
-    manifests = [
-        f for f in os.listdir(tmp_path / "ndi" / "_meta") if f.startswith("manifest_v")
-    ]
-    assert manifests == [f"manifest_v{idx.manifest['version']}.json"]
+    assert sorted(os.listdir(tmp_path / "ndi")) == ["_meta", "data"]
+    table_rows = LakeTable.load(str(tmp_path / "ndi")).read(spark)
+    assert table_rows.select("doc_id").distinct().count() == 12
+    assert idx.table.expire_snapshots(keep_last=1)["deleted_files"] > 0
+    live = {os.path.basename(f["path"]) for f in idx.table.manifest.files}
+    assert live == set(os.listdir(tmp_path / "ndi" / "data"))
+    assert idx.table.history() == [v]
     _, vac_dups = idx.match_batch(spark, probe, threshold=0.9)
     assert {
         (r["url"], int(r["matched_id"]), r["est_jaccard"]) for r in vac_dups.collect()

@@ -453,3 +453,110 @@ def test_stratified_sample_matches_duckdb_oracle(spark):
         for r in stratified_sample(docs, {"en": 0.3, "de": 1.0}, default_fraction=0.5).collect()
     }
     assert got <= bigger
+
+
+# ---- whitespace properties against the frozen board oracles ----
+#
+# Spark's trim strips only spaces, so text made of tabs and newlines (or
+# words wrapped in them) is where a guard written as length(trim(text)) > 0
+# and the oracles' token filters part ways.  Each example is one small
+# corpus, run through the board query and the board's own DuckDB SQL.
+
+from hypothesis import HealthCheck, example, given, settings  # noqa: E402
+from hypothesis import strategies as st  # noqa: E402
+
+_WS_PROP = settings(
+    max_examples=8,
+    derandomize=True,
+    deadline=None,
+    suppress_health_check=[HealthCheck.too_slow],
+)
+_ws_atom = st.sampled_from(["alpha", "beta", "Gamma", "delta", "eps", "x", " ", "\t", "\n"])
+_ws_corpus = st.lists(
+    st.lists(_ws_atom, min_size=0, max_size=14).map("".join), min_size=1, max_size=10
+)
+# a tab-only doc, words behind a tab, and k=5 words padded so that the
+# untrimmed split counts more tokens than there are words
+_WS_EDGES = ["\t", "\n\n", " \t ", "\talpha beta", "alpha beta gamma delta\t\n", "x"]
+
+
+def _ws_documents(tmp: str, texts: list[str]):
+    """documents.parquet for the board queries (doc_id 37*i: every doc is
+    also a planted eval prefix in q_corpus_decontam) + a DuckDB view."""
+    import os
+
+    pdf = pd.DataFrame({"doc_id": [37 * i for i in range(len(texts))], "text": texts})
+    pdf.to_parquet(os.path.join(tmp, "documents.parquet"), index=False)
+    con = duckdb.connect()
+    con.execute(
+        f"CREATE VIEW documents AS SELECT * FROM read_parquet('{tmp}/documents.parquet')"
+    )
+    return con
+
+
+def _rows(values) -> list[tuple]:
+    from decimal import Decimal
+
+    return sorted(
+        (tuple(round(float(v), 9) if isinstance(v, (float, Decimal)) else v for v in r)
+         for r in values),
+        key=repr,
+    )
+
+
+@_WS_PROP
+@given(_ws_corpus)
+@example(_WS_EDGES)
+def test_chunk_winnow_whitespace_matches_board_oracle(spark, texts):
+    import tempfile
+
+    import __spark_entry__ as entry
+
+    with tempfile.TemporaryDirectory() as tmp:
+        con = _ws_documents(tmp, texts)
+        got = entry.q_text_chunk_winnow(spark, tmp).collect()
+        want = con.execute(entry._chunk_winnow_oracle_sql()).fetchall()
+    assert _rows(got) == _rows(want)
+
+
+@_WS_PROP
+@given(_ws_corpus, st.sampled_from([1, 2, 3]))
+@example(_WS_EDGES, 1)
+@example(_WS_EDGES, 3)
+def test_decontam_whitespace_matches_board_oracle(spark, texts, k):
+    """The board row at shingle width k, and the per-eval audit with the
+    raw corpus as its own eval set (so whitespace-only eval docs reach the
+    guard), against the board oracle and its shingle SQL."""
+    import tempfile
+
+    import __spark_entry__ as entry
+    from ape_dts_spark.operators.text_dedup import decontaminate
+
+    audit_sql = (
+        "WITH "
+        + entry._NAMED_SHINGLES_SQL.format(name="t", src="SELECT doc_id, text FROM documents", k=k)
+        + f"""
+        , vocab AS (
+          SELECT shingle FROM t_sh GROUP BY shingle HAVING count(*) <= 1000
+        ), sizes AS (
+          SELECT doc_id, count(*) AS n FROM t_sh GROUP BY doc_id
+        ), matched AS (
+          SELECT doc_id, count(*) AS m FROM t_sh SEMI JOIN vocab USING (shingle)
+          GROUP BY doc_id
+        )
+        SELECT s.doc_id, CAST(s.n AS BIGINT), CAST(coalesce(m.m, 0) AS BIGINT),
+               ((20000::HUGEINT * coalesce(m.m, 0) + s.n) // (2 * s.n)) / 10000.0
+        FROM sizes s LEFT JOIN matched m USING (doc_id)
+        """
+    )
+    with tempfile.TemporaryDirectory() as tmp:
+        con = _ws_documents(tmp, texts)
+        got = entry.q_corpus_decontam(spark, tmp, k=k).collect()
+        want = con.execute(entry._corpus_decontam_oracle_sql(k=k)).fetchall()
+        assert _rows(got) == _rows(want)
+        docs = spark.read.parquet(f"{tmp}/documents.parquet")
+        got = decontaminate(docs, docs, k=k, max_doc_freq=1000).select(
+            "doc_id", "n_shingles", "n_matched", "overlap_frac"
+        ).collect()
+        want = con.execute(audit_sql).fetchall()
+    assert _rows(got) == _rows(want)
