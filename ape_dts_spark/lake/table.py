@@ -726,11 +726,12 @@ class LakeTable:
         compacts every bucket that has deltas.  Atomic single commit.
 
         Winning delete markers are always kept: they are rewritten into
-        tombstone files instead of being dropped, so an out-of-order upsert
-        with a lower order value can never resurrect a deleted key.  The
-        streaming tail's file source (streaming/stream.py) is not sliced by
-        lsn, so such late upserts do arrive there.  Bounded: one tombstone
-        per deleted key."""
+        tombstone files instead of being dropped, so a fold never changes
+        what a later merge resolves to.  On a table shared by several jobs
+        (one ``hwm_lsn.{job_id}`` per job) a peer job's slice can carry a
+        lower-lsn upsert for a key this job deleted: without the tombstone
+        that upsert would resurrect the key after the fold but not before
+        it.  Bounded: one tombstone per deleted key."""
         if buckets is None:
             buckets = sorted(
                 {f["bucket"] for f in self.manifest.files if f.get("kind") == "delta"}

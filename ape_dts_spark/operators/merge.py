@@ -99,7 +99,7 @@ def merge_into(
     )
     # counts come from the written delta files' parquet footers (exact,
     # driver-side, zero extra Spark work) — unlike an Observation they
-    # exist on every plan shape, streaming foreachBatch included
+    # exist on every plan shape, an empty slice included
     new_version, affected, per_bucket = table.append_delta(
         delta, properties=properties, pre_clustered=pre_clustered
     )

@@ -252,7 +252,7 @@ class NearDupIndex:
         the key domain being urls; numeric ids tie-break as their string
         forms).  A batch doc whose id is already indexed matches itself at
         1.0 — filter ``dups`` on ``matched_id != id`` when re-crawls of the
-        SAME key should pass.  NB: the engine's ``_near_dup_filter`` applies
+        SAME key should pass.  NB: the engine's near-dup filter applies
         NO such exemption — a same-key re-INSERT with near-identical text
         (e.g. insert-after-delete; deletes never purge the sidecar)
         self-matches and is dropped, the same content-ingested-once

@@ -261,11 +261,10 @@ def misbound_lifecycle_error(
 def emit_change_feed(
     spark: SparkSession, pages: LakeTable, deduped: DataFrame, cfg: "EngineConfig"
 ) -> None:
-    """Outbound keyed change feed (reference kafka_sinker.rs:56-97) — the ONE
-    spelling, shared by the batch driver and the streaming tail.  Must run
-    BEFORE the merge so attached before-images reflect pre-batch committed
-    state; callers persist `deduped` so the prep chain (extraction included)
-    runs once for feed + merge."""
+    """Outbound keyed change feed (reference kafka_sinker.rs:56-97).  Must
+    run BEFORE the merge so attached before-images reflect pre-batch
+    committed state; the caller persists `deduped` so the prep chain
+    (extraction included) runs once for feed + merge."""
     from ape_dts_spark.operators.before_image import attach_before_images
     from ape_dts_spark.operators.change_feed import (
         avro_encode_records,
@@ -358,10 +357,9 @@ def resolve_transform(spec) -> object | None:
 
 
 def prepare_changes(pages: LakeTable, df: DataFrame, cfg: "EngineConfig") -> DataFrame:
-    """The shared per-batch transform chain (batch driver + streaming path):
-    filter -> route -> user transform hook -> key-change split -> NULL-key
-    quarantine -> schema projection (rename-aware) -> LWW dedup ->
-    vectorized extraction."""
+    """The per-batch transform chain: filter -> route -> user transform hook
+    -> key-change split -> NULL-key quarantine -> schema projection
+    (rename-aware) -> LWW dedup -> vectorized extraction."""
     df = cfg.filter.apply(df)
     df = cfg.router.route_cols(df)
     hook = resolve_transform(cfg.transform)
@@ -717,6 +715,21 @@ class CdcEngine:
             [T.StructField(f.name, from_arrow_type(f.type), True) for f in arrow]
         )
 
+    def _has_change_files(self) -> bool:
+        """Whether changes_path holds a data file, by a driver-side listing
+        (no Spark job).  Names the parquet reader skips (``_SUCCESS``,
+        ``.crc`` files, ``_``/``.`` directories) do not count."""
+        import os
+
+        path = self.cfg.changes_path
+        if os.path.isfile(path):
+            return True
+        for _root, dirs, files in os.walk(path):
+            dirs[:] = [d for d in dirs if not d.startswith(("_", "."))]
+            if any(not f.startswith(("_", ".")) for f in files):
+                return True
+        return False
+
     def max_lsn(self) -> int:
         row = self._changes().agg(F.max("lsn")).collect()[0]
         return row[0] or 0
@@ -745,10 +758,15 @@ class CdcEngine:
         hwm, last_batch = self.committed_hwm()
         if last_batch < 0 and self.cfg.start_lsn > hwm:
             hwm = self.cfg.start_lsn  # fresh job: begin after the configured position
-        end = self.max_lsn()
-        pending_ddl_lsns = [d["lsn"] for d in self._ddls]
-        if pending_ddl_lsns:
-            end = max(end, max(pending_ddl_lsns))
+        if not self._has_change_files():
+            # empty poll: nothing published yet, so there is no schema to
+            # infer and no position to reach; pending DDL waits for changes
+            end = hwm
+        else:
+            end = self.max_lsn()
+            pending_ddl_lsns = [d["lsn"] for d in self._ddls]
+            if pending_ddl_lsns:
+                end = max(end, max(pending_ddl_lsns))
         batch_id = last_batch
         n = 0
         while hwm < end and self.stopped_reason is None:
@@ -790,64 +808,58 @@ class CdcEngine:
 
     # ------------------------------------------------------------- one batch
 
-    def _content_filter(self, deduped, checkpoints: list):
-        """(filtered, fresh_inserts, n_dropped): drop INSERT rows whose text
-        the ContentIndex has already seen; updates/deletes pass through.
-        Exact by construction (md5 equality; the bloom only prunes).  The
-        checkpointed drop keys go on ``checkpoints`` for the caller to
-        release once the batch is done."""
-        cfg = self.cfg
+    def _index_filter(self, deduped, checkpoints: list, option: str, find_dups):
+        """(filtered, fresh_inserts, fresh_rows, n_dropped): drop INSERT rows
+        whose text a sidecar index already holds; updates/deletes pass
+        through (key identity governs them).  ``find_dups(inserts,
+        checkpoints)`` is the index's lookup: it returns ``(dups, rows)``,
+        where ``rows`` is its checkpointed append frame or None.
+
+        The lookup runs EXACTLY ONCE per batch: only the tiny drop-key set is
+        materialized (eager localCheckpoint, bounded by the batch's duplicate
+        count), and the outputs are cheap anti-joins from the already-pinned
+        batch.  Leaving the lookup join in the output lineage would re-run it
+        on EVERY downstream action (feed emit, merge's several jobs, the
+        post-merge append, metrics counts) — measured as a many-minute stall
+        per batch before this shape.  Every checkpointed frame goes on
+        ``checkpoints`` for the caller to release once the batch is done."""
+        key = self.cfg.key_col
         if "text" not in deduped.columns:
             raise ValueError(
-                "content_index_path requires a 'text' column in the prepared "
+                f"{option} requires a 'text' column in the prepared "
                 "batch — enable extract_text or carry text in the stream"
             )
         is_candidate = (F.col("op") == "insert") & F.col("text").isNotNull()
-        inserts = deduped.filter(is_candidate)
-        _, dups = self._cidx.dedup_batch(
-            self.spark, inserts, text_col="text", id_col=cfg.key_col
-        )
-        # run the bloom/verify pipeline ONCE per batch: materialize only the
-        # tiny drop-key set (eager localCheckpoint) and derive both outputs
-        # as cheap anti-joins from the pinned batch — leaving the verify
-        # join in the output lineage re-runs it on every downstream action
-        # (feed, merge's jobs, the index append, metrics counts)
-        drop_keys = dups.select(cfg.key_col).localCheckpoint()
+        dups, rows = find_dups(deduped.filter(is_candidate), checkpoints)
+        # the prepared batch is LWW-deduped per key, so the key alone
+        # identifies the dropped insert rows
+        drop_keys = dups.select(key).localCheckpoint()
         checkpoints.append(drop_keys)
         n_dropped = drop_keys.count()  # checkpoint already materialized
-        filtered = deduped.join(drop_keys, cfg.key_col, "left_anti").select(
-            *deduped.columns
-        )
-        fresh = filtered.filter(is_candidate)
-        return filtered, fresh, n_dropped
-
-    def _near_dup_filter(self, deduped, checkpoints: list):
-        """(filtered, fresh_inserts, n_dropped): drop INSERT rows whose text
-        near-dups anything in the NearDupIndex at the configured threshold;
-        updates/deletes pass through (key identity governs them).
-
-        The match pipeline (signatures -> index read -> candidate joins) is
-        run EXACTLY ONCE per batch: only the tiny drop-key set is
-        materialized (eager localCheckpoint — bounded by the batch's
-        duplicate count), and both outputs are cheap anti-joins from the
-        already-pinned batch.  Leaving the match join in the output lineage
-        would re-run it on EVERY downstream action (feed emit, merge's
-        several jobs, the post-merge append, metrics counts) — measured as
-        a many-minute stall per batch before this shape.  Both checkpointed
-        frames go on ``checkpoints`` for the caller to release."""
-        cfg = self.cfg
-        if "text" not in deduped.columns:
-            raise ValueError(
-                "near_dup_index_path requires a 'text' column in the prepared "
-                "batch — enable extract_text or carry text in the stream"
+        filtered = deduped.join(drop_keys, key, "left_anti").select(*deduped.columns)
+        if rows is not None:
+            rows = rows.join(
+                drop_keys.select(F.col(key).cast("string").alias("doc_id")),
+                "doc_id",
+                "left_anti",
             )
-        is_candidate = (F.col("op") == "insert") & F.col("text").isNotNull()
-        inserts = deduped.filter(is_candidate)
-        # ONE signature pass per batch: the band-rows frame is narrow
-        # (~200B x bands per doc), eagerly checkpointed, and shared between
-        # the match here and the post-merge append (minus the drop set) —
-        # without this the expensive minhash projection over the batch's
-        # text runs twice per batch
+        return filtered, filtered.filter(is_candidate), rows, n_dropped
+
+    def _content_dups(self, inserts, checkpoints: list):
+        """ContentIndex lookup: exact by construction (md5 equality; the
+        bloom only prunes)."""
+        _, dups = self._cidx.dedup_batch(
+            self.spark, inserts, text_col="text", id_col=self.cfg.key_col
+        )
+        return dups, None
+
+    def _near_dups(self, inserts, checkpoints: list):
+        """NearDupIndex lookup at the configured threshold.  ONE signature
+        pass per batch: the band-rows frame is narrow (~200B x bands per
+        doc), eagerly checkpointed, and shared between the match here and
+        the post-merge append (minus the drop set) — without this the
+        expensive minhash projection over the batch's text runs twice."""
+        cfg = self.cfg
         rows = self._ndidx.band_rows(
             inserts, text_col="text", id_col=cfg.key_col
         ).localCheckpoint()
@@ -861,21 +873,7 @@ class CdcEngine:
             max_bucket=cfg.near_dup_max_bucket or None,
             rows=rows,
         )
-        # the prepared batch is LWW-deduped per key, so the key alone
-        # identifies the dropped insert rows
-        drop_keys = dups.select(cfg.key_col).localCheckpoint()
-        checkpoints.append(drop_keys)
-        n_dropped = drop_keys.count()  # checkpoint already materialized
-        filtered = deduped.join(drop_keys, cfg.key_col, "left_anti").select(
-            *deduped.columns
-        )
-        fresh = filtered.filter(is_candidate)
-        fresh_rows = rows.join(
-            drop_keys.select(F.col(cfg.key_col).cast("string").alias("doc_id")),
-            "doc_id",
-            "left_anti",
-        )
-        return filtered, fresh, fresh_rows, n_dropped
+        return dups, rows
 
     def _apply_batch(self, batch_id: int, lo: int, hi: int, ddls: list[dict] | None) -> None:
         t0 = time.monotonic()
@@ -893,11 +891,11 @@ class CdcEngine:
         already_applied = int(hwm_prop or 0) >= hi
         slice_df = self._changes().filter((F.col("lsn") > lo) & (F.col("lsn") <= hi))
         obs = Observation()
-        slice_df = slice_df.observe(
-            obs,
+        input_metrics = (
             F.count(F.lit(1)).alias("records"),
             F.sum(F.coalesce(F.length("html"), F.lit(0))).alias("bytes"),
         )
+        slice_df = slice_df.observe(obs, *input_metrics)
         deduped = prepare_changes(self.pages, slice_df, cfg)
 
         cd_fresh = nd_fresh = nd_rows = None
@@ -917,7 +915,9 @@ class CdcEngine:
                 # a pin each pass would re-run the extraction UDF over the html
                 deduped = deduped.persist()
                 pinned.append(deduped)
-                deduped, cd_fresh, cd_dropped = self._content_filter(deduped, checkpoints)
+                deduped, cd_fresh, _, cd_dropped = self._index_filter(
+                    deduped, checkpoints, "content_index_path", self._content_dups
+                )
             if self._ndidx is not None and not already_applied:
                 # pin for the same reason as the exact filter (the match and
                 # the post-merge append both re-read the batch); when the
@@ -925,7 +925,9 @@ class CdcEngine:
                 # bloom/verify work is not re-run either
                 deduped = deduped.persist()
                 pinned.append(deduped)
-                deduped, nd_fresh, nd_rows, nd_dropped = self._near_dup_filter(deduped, checkpoints)
+                deduped, nd_fresh, nd_rows, nd_dropped = self._index_filter(
+                    deduped, checkpoints, "near_dup_index_path", self._near_dups
+                )
 
             t_prep = time.monotonic() - t0
             t_feed = 0.0
@@ -1001,18 +1003,24 @@ class CdcEngine:
                         _LOG.warning(
                             "Observation.getRowOrEmpty accessor unavailable on "
                             "this Spark build — every batch will now run an "
-                            "extra count job over its slice for input metrics"
+                            "extra aggregate job over its slice for input metrics"
                         )
                 if resolved:
                     got = obs.get
                     input_records = int(got["records"] or 0)
                     input_bytes = int(got["bytes"] or 0)
                 else:
-                    # fall back to one bounded count job (rare: empty slices only)
-                    input_records = self._changes().filter(
-                        (F.col("lsn") > lo) & (F.col("lsn") <= hi)
-                    ).count()
-                    input_bytes = 0
+                    # unresolved Observation (an empty slice; also seen on a
+                    # first batch with both sidecar indexes on): one bounded
+                    # aggregate job over the slice computes the same metrics
+                    got = (
+                        self._changes()
+                        .filter((F.col("lsn") > lo) & (F.col("lsn") <= hi))
+                        .agg(*input_metrics)
+                        .collect()[0]
+                    )
+                    input_records = int(got["records"])
+                    input_bytes = int(got["bytes"] or 0)
                 self.metrics["record_count"] += input_records
                 self.metrics["data_bytes"] += input_bytes
                 self.metrics["sinked_records"] += stats.output_rows if stats.output_rows > 0 else 0

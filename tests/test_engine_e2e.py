@@ -214,3 +214,216 @@ def test_engine_retention_bounds_history(spark, fixture_dir, tmp_path):
     # resume protocol unaffected: a rerun replays nothing
     _, summary2 = _run(spark, fixture_dir, t.path, expire_keep_last=2)
     assert summary2["batches"] == 0
+
+
+@pytest.mark.parametrize("redeliver", [False, True])
+def test_tail_files_between_runs_converge(spark, fixture_dir, tmp_path, redeliver):
+    """A follower calling run() as files land: wave 1 (lsn <= 300), then
+    wave 2 — either the remaining events, or one file re-delivering every
+    event (an at-least-once upstream).  Re-delivered events at or below the
+    committed hwm are never re-read, and the final table, text included,
+    equals the sequential oracle."""
+    source = spark.read.parquet(str(fixture_dir / "changes"))
+    changes = str(tmp_path / "changes")
+    source.filter(F.col("lsn") <= 300).coalesce(2).write.parquet(changes)
+    t = _seed_pages(spark, tmp_path / "pages")
+    eng = CdcEngine(
+        spark, EngineConfig(job_id="tail", pages_path=t.path, changes_path=changes)
+    )
+    assert eng.run()["hwm"] == 300
+
+    wave2 = source if redeliver else source.filter(F.col("lsn") > 300)
+    wave2.coalesce(1).write.mode("append").parquet(changes)
+    summary = eng.run()
+    assert summary["batches"] >= 1 and summary["hwm"] == N_EVENTS
+    assert summary["events"] == N_EVENTS  # cumulative over both runs
+    _assert_tables_equal(_pages_pd(spark, t), _oracle_pd(spark, fixture_dir, with_ddl=False))
+
+
+def test_empty_poll_on_missing_or_empty_changes_dir(spark, tmp_path):
+    """Nothing published yet: run() on a missing, then an empty, change
+    directory is an empty poll at the committed hwm, and a pending DDL waits
+    for the changes."""
+    t = LakeTable.create(str(tmp_path / "pages"), PAGES_COLS, bucket_key="url", bucket_count=4)
+    ddl = str(tmp_path / "ddl")
+    spark.createDataFrame(
+        [(5, "add_column", '{"col":"quality","type":"int"}')],
+        "lsn long, ddl_type string, payload string",
+    ).write.parquet(ddl)
+    changes = tmp_path / "changes"
+    eng = CdcEngine(
+        spark,
+        EngineConfig(job_id="idle", pages_path=t.path, changes_path=str(changes), ddl_path=ddl),
+    )
+    for _ in ("missing", "empty"):
+        summary = eng.run()
+        assert (summary["batches"], summary["hwm"], summary["events"]) == (0, 0, 0)
+        changes.mkdir(exist_ok=True)
+        (changes / "_SUCCESS").write_text("")
+    assert "quality" not in [f["name"] for f in t.refresh().schema.fields]
+    assert eng.committed_hwm() == (0, -1)
+
+
+# ------------------------------------- DDL and changes-schema, small streams
+
+SMALL_SEED = 40
+
+
+def _small_pages(spark, path, n=SMALL_SEED):
+    t = LakeTable.create(str(path), PAGES_COLS, bucket_key="url", bucket_count=4)
+    t.append(
+        gen_pages_seed(spark, n, seed=7).withColumn("text", extract_text_udf(F.col("html")))
+    )
+    return t
+
+
+def _write_ddls(spark, path, rows):
+    spark.createDataFrame(rows, "lsn long, ddl_type string, payload string").coalesce(
+        1
+    ).write.parquet(str(path))
+
+
+def test_changes_schema_refreshes_after_add_column(spark, tmp_path):
+    """Files appended AFTER an add_column DDL carry the new column; a schema
+    pinned at first inference would null it into the sink."""
+    ch = str(tmp_path / "changes")
+    gen_changes(spark, 100, SMALL_SEED, seed=7).drop("fetch_status").write.parquet(ch)
+    # DDL MID-run (not at the stream end): batches after it re-infer over
+    # phase-1 files only, so the cache must also refresh at the next run()
+    _write_ddls(spark, tmp_path / "ddl", [(50, "add_column", '{"col":"quality","type":"int"}')])
+    t = _small_pages(spark, tmp_path / "pages")
+    cfg = EngineConfig(
+        job_id="f1",
+        pages_path=t.path,
+        changes_path=ch,
+        ddl_path=str(tmp_path / "ddl"),
+        batch_lsn_width=60,
+    )
+    eng = CdcEngine(spark, cfg)
+    eng.run()  # phase 1: no `quality` anywhere; DDL applied at lsn 50
+    assert "quality" in [f["name"] for f in t.refresh().schema.fields]
+
+    # phase 2: tail files now carry the DDL-added column
+    gen_changes(spark, 100, SMALL_SEED, seed=7, start_lsn=101).drop("fetch_status").withColumn(
+        "quality", F.pmod(F.col("lsn"), F.lit(7)).cast("int")
+    ).write.mode("append").parquet(ch)
+    eng.run()
+
+    got = t.refresh().read(spark).toPandas()
+    late = got[(got.last_lsn >= 101)]
+    assert len(late) > 0
+    # every row whose winning event is post-DDL must carry its quality value
+    assert late["quality"].notna().all(), "DDL-added column nulled into the sink"
+    assert (late["quality"] == late["last_lsn"] % 7).all()
+
+
+def test_equal_lsn_ddls_all_apply(spark, tmp_path):
+    ch = str(tmp_path / "changes")
+    gen_changes(spark, 100, SMALL_SEED, seed=7).drop("fetch_status").write.parquet(ch)
+    _write_ddls(
+        spark,
+        tmp_path / "ddl",
+        [
+            (50, "add_column", '{"col":"q2","type":"int"}'),
+            (50, "rename_column", '{"from":"lang","to":"language"}'),
+        ],
+    )
+    t = _small_pages(spark, tmp_path / "pages")
+    cfg = EngineConfig(
+        job_id="f4",
+        pages_path=t.path,
+        changes_path=ch,
+        ddl_path=str(tmp_path / "ddl"),
+        batch_lsn_width=60,
+    )
+    eng = CdcEngine(spark, cfg)
+    eng.run()
+    names = [f["name"] for f in t.refresh().schema.fields]
+    assert "q2" in names, "second DDL at the same lsn was skipped"
+    assert "language" in names and "lang" not in names
+    assert eng.metrics["ddl_records"] == 2
+
+
+def test_empty_slice_batches_complete(spark, tmp_path):
+    """lsn gaps produce batches whose slice is empty — the run must complete
+    with exact counts, never block on an unresolved Observation."""
+    ch = str(tmp_path / "changes")
+    df = gen_changes(spark, 10, SMALL_SEED, seed=7).drop("fetch_status")
+    df.union(
+        gen_changes(spark, 5, SMALL_SEED, seed=7, start_lsn=5001).drop("fetch_status")
+    ).write.parquet(ch)
+    t = _small_pages(spark, tmp_path / "pages")
+    cfg = EngineConfig(
+        job_id="f5", pages_path=t.path, changes_path=ch, batch_lsn_width=2000
+    )
+    eng = CdcEngine(spark, cfg)
+    summary = eng.run()
+    assert summary["events"] == 15
+    assert summary["batches"] >= 3  # at least one all-empty slice in the gap
+
+
+def test_infer_changes_schema_widen_long_double_restart(spark, tmp_path):
+    """A widen_column long->double mid-stream leaves mixed int64/double
+    footers.  mergeSchema throws; the fallback must promote the sampled
+    footer type to the SINK's type for every pair widen_column allows
+    (_WIDEN_OK), long->double included — a literal promote set missed it and
+    the restart crash-looped on post-DDL files."""
+    from pyspark.sql import types as T
+
+    cols = [
+        ("url", "string", False),
+        ("score", "double", True),  # sink already widened long -> double
+        ("last_lsn", "long", True),
+    ]
+    LakeTable.create(str(tmp_path / "pages"), cols, bucket_key="url", bucket_count=2)
+    ch = str(tmp_path / "changes")
+    pre = spark.createDataFrame(
+        [(1, "insert", "u1", 100)], "lsn long, op string, url string, score long"
+    )
+    post = spark.createDataFrame(
+        [(2, "insert", "u2", 1.5)], "lsn long, op string, url string, score double"
+    )
+    pre.write.parquet(ch, mode="append")
+    post.write.parquet(ch, mode="append")
+
+    eng = CdcEngine(
+        spark, EngineConfig(job_id="j", pages_path=str(tmp_path / "pages"), changes_path=ch)
+    )
+    eng._ddls = []
+    df = eng._changes()
+    assert dict((f.name, f.dataType) for f in df.schema.fields)["score"] == T.DoubleType()
+    rows = {r["url"]: r["score"] for r in df.collect()}
+    assert rows == {"u1": 100.0, "u2": 1.5}
+    # live tail: a file appended AFTER inference must be picked up by the
+    # cached grouped reader (the file list is re-listed per call, not frozen)
+    spark.createDataFrame(
+        [(3, "insert", "u3", 250)], "lsn long, op string, url string, score long"
+    ).write.parquet(ch, mode="append")
+    rows2 = {r["url"]: r["score"] for r in eng._changes().collect()}
+    assert rows2 == {"u1": 100.0, "u2": 1.5, "u3": 250.0}
+
+
+def test_infer_changes_schema_widen_int_long_single_scan(spark, tmp_path):
+    """int->long mixed footers ARE reader-promotable: the fallback must
+    return ONE explicit read schema (single scan over the dir, no per-group
+    union) with the sink's widened type."""
+    from pyspark.sql import types as T
+
+    cols = [("url", "string", False), ("n", "long", True), ("last_lsn", "long", True)]
+    LakeTable.create(str(tmp_path / "pages"), cols, bucket_key="url", bucket_count=2)
+    ch = str(tmp_path / "changes")
+    spark.createDataFrame(
+        [(1, "insert", "u1", 7)], "lsn long, op string, url string, n int"
+    ).write.parquet(ch, mode="append")
+    spark.createDataFrame(
+        [(2, "insert", "u2", 9)], "lsn long, op string, url string, n long"
+    ).write.parquet(ch, mode="append")
+    eng = CdcEngine(
+        spark, EngineConfig(job_id="j", pages_path=str(tmp_path / "pages"), changes_path=ch)
+    )
+    eng._ddls = []
+    sch = eng._infer_changes_schema()
+    assert isinstance(sch, T.StructType)  # single-scan fast path
+    assert dict((f.name, f.dataType) for f in sch.fields)["n"] == T.LongType()
+    rows = {r["url"]: r["n"] for r in eng._changes().collect()}
+    assert rows == {"u1": 7, "u2": 9}

@@ -296,3 +296,59 @@ def test_expire_snapshots_bounds_history_and_gcs_orphans(spark, tmp_path):
     # idempotent
     rep2 = t2.expire_snapshots(keep_last=2)
     assert rep2["deleted_files"] == 0 and rep2["expired_versions"] == []
+
+
+def test_lake_create_refuses_unrelated_directory(tmp_path):
+    """create() must not adopt a pre-existing directory holding unrelated
+    content; a crashed half-made layout (bare _meta/data, no committed
+    manifest) stays resumable."""
+    cols = [("url", "string", False)]
+    # unrelated content -> loud failure
+    bad = tmp_path / "existing"
+    bad.mkdir()
+    (bad / "precious.txt").write_text("not a table")
+    with pytest.raises(FileExistsError, match="refusing to adopt"):
+        LakeTable.create(str(bad), cols)
+    assert (bad / "precious.txt").read_text() == "not a table"
+    # resumable half-made layout -> adopted
+    half = tmp_path / "half"
+    os.makedirs(half / "_meta")
+    os.makedirs(half / "data")
+    t = LakeTable.create(str(half), cols)
+    assert t.manifest.version == 0
+    # committed table -> still the original already-committed error
+    with pytest.raises(FileExistsError, match="already committed"):
+        LakeTable.create(str(half), cols)
+
+
+def test_create_resumes_after_half_created_dir(tmp_path):
+    p = str(tmp_path / "t")
+    os.makedirs(os.path.join(p, "_meta"))  # crash between mkdir and publish
+    assert not LakeTable.exists(p)
+    t = LakeTable.create(p, [("k", "string", False)])  # must not raise
+    assert LakeTable.exists(p) and t.version == 0
+    with pytest.raises(FileExistsError):
+        LakeTable.create(p, [("k", "string", False)])  # committed: still refused
+
+
+def test_compacted_entries_carry_footer_rows(spark, tmp_path):
+    """Every manifest entry, compacted ones included, carries its exact
+    footer row count; tombstone files count only deletes."""
+    from ape_dts_spark.functions.extract_text import extract_text_udf
+    from ape_dts_spark.operators.merge import merge_into
+    from ape_dts_spark.sources.generator import PAGES_COLS, gen_changes, gen_pages_seed
+
+    t = LakeTable.create(str(tmp_path / "pages"), PAGES_COLS, bucket_key="url", bucket_count=4)
+    t.append(
+        gen_pages_seed(spark, 20, seed=7).withColumn("text", extract_text_udf(F.col("html")))
+    )
+    ch = gen_changes(spark, 50, 20, seed=7).drop("fetch_status", "tx_id", "origin")
+    merge_into(spark, t, ch)
+    assert any(f.get("kind") == "delta" for f in t.manifest.files)
+    t.compact(spark)
+    for f in t.refresh().manifest.files:
+        assert isinstance(f["rows"], int) and f["rows"] >= 0, f
+        if f.get("kind") == "tombstone":
+            assert f["deletes"] == f["rows"]
+        else:
+            assert f.get("deletes", 0) == 0

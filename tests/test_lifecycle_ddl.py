@@ -11,6 +11,8 @@ change stream dispatch through `CdcEngine._apply_lifecycle_ddl`:
 * drop_table of the bound table ends the stream (stopped_reason).
 """
 
+import os
+
 import pandas as pd
 import pytest
 from pyspark.sql import functions as F
@@ -156,6 +158,57 @@ def test_lifecycle_ddl_without_catalog_raises(spark, lifecycle_dir, tmp_path):
     )
     with pytest.raises(ValueError, match="catalog_root"):
         CdcEngine(spark, cfg).run()
+
+
+def _restart_cfg(spark, tmp_path, ddl_rows):
+    """A 40-page table at <tmp>/db/pages bound to the catalog <tmp>/db,
+    100 changes, and the given DDL rows."""
+    root = tmp_path / "db"
+    os.makedirs(root, exist_ok=True)
+    t = LakeTable.create(str(root / "pages"), PAGES_COLS, bucket_key="url", bucket_count=4)
+    t.append(
+        gen_pages_seed(spark, 40, seed=7).withColumn("text", extract_text_udf(F.col("html")))
+    )
+    ch = str(tmp_path / "changes")
+    gen_changes(spark, 100, 40, seed=7).drop("fetch_status").write.parquet(ch)
+    spark.createDataFrame(ddl_rows, "lsn long, ddl_type string, payload string").coalesce(
+        1
+    ).write.parquet(str(tmp_path / "ddl"))
+    return EngineConfig(
+        job_id="lc",
+        pages_path=t.path,
+        changes_path=ch,
+        ddl_path=str(tmp_path / "ddl"),
+        batch_lsn_width=60,
+        catalog_root=str(root),
+    )
+
+
+def test_restart_after_drop_table_stops_cleanly(spark, tmp_path):
+    cfg = _restart_cfg(spark, tmp_path, [(50, "drop_table", '{"table":"pages"}')])
+    eng = CdcEngine(spark, cfg)
+    s1 = eng.run()
+    assert "dropped" in (s1["stopped_reason"] or "")
+    # restart against the same config: must reach the same clean stop, not
+    # FileNotFoundError (the drop DDL can never be "re-replayed" otherwise)
+    eng2 = CdcEngine(spark, cfg)
+    s2 = eng2.run()
+    assert "dropped" in (s2["stopped_reason"] or "")
+    assert s2["batches"] == 0
+
+
+def test_drop_database_of_own_db_stops_cleanly(spark, tmp_path):
+    cfg = _restart_cfg(
+        spark, tmp_path, [(50, "drop_database", '{"db":"db","cascade":true}')]
+    )
+    eng = CdcEngine(spark, cfg)
+    s1 = eng.run()  # must not raise FileNotFoundError mid-run
+    assert "database" in (s1["stopped_reason"] or "")
+    assert not os.path.isdir(os.path.join(str(tmp_path), "db"))
+    # restart: same clean stop
+    eng2 = CdcEngine(spark, cfg)
+    s2 = eng2.run()
+    assert "dropped" in (s2["stopped_reason"] or "")
 
 
 def test_max_rps_pacing_and_ini_parity(spark, tmp_path):

@@ -87,3 +87,35 @@ def test_engine_emits_position_and_monitor_logs(spark, tmp_path):
     total = sum(int(ln.rsplit("sum=", 1)[1]) for ln in mon_lines
                 if " record_count | " in ln)
     assert total == eng.metrics["record_count"]
+
+
+def test_counted_fallback_reports_records_and_bytes(spark, tmp_path):
+    """With the Observation accessor unavailable every batch takes the
+    counted fallback, which must still report the slice's records and html
+    bytes, in the engine metrics and in monitor.log."""
+    import pandas as pd
+
+    from ape_dts_spark.lake.table import LakeTable
+    from ape_dts_spark.sources.generator import PAGES_COLS
+    from ape_dts_spark.streaming.driver import CdcEngine, EngineConfig
+
+    ch = str(tmp_path / "changes")
+    gen_changes(spark, 100, 30, seed=5).write.parquet(ch)
+    pp = str(tmp_path / "pages")
+    LakeTable.create(pp, PAGES_COLS, bucket_key="url", bucket_count=4)
+    logs = str(tmp_path / "logs")
+    eng = CdcEngine(spark, EngineConfig(
+        job_id="fallback", pages_path=pp, changes_path=ch,
+        extract_text=False, log_dir=logs, batch_lsn_width=40,
+    ))
+    eng._obs_accessor_ok = False
+    summary = eng.run()
+    assert summary["batches"] == 3
+    html = pd.read_parquet(ch)["html"]
+    want_bytes = sum(len(h) for h in html if h is not None)
+    assert want_bytes > 0
+    assert eng.metrics["record_count"] == 100
+    assert eng.metrics["data_bytes"] == want_bytes
+    mon_lines = open(os.path.join(logs, "monitor.log")).read().splitlines()
+    logged = sum(int(ln.rsplit("sum=", 1)[1]) for ln in mon_lines if " data_bytes | " in ln)
+    assert logged == want_bytes

@@ -1,6 +1,7 @@
 """Unit tests: checker, filters/router/config, text ops, similarity, multimodal."""
 
 import pytest
+from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 from ape_dts_spark.config import load_task_config
@@ -10,9 +11,14 @@ from ape_dts_spark.operators.multimodal import frame_sample_plan, media_metadata
 from ape_dts_spark.operators.similarity import brute_force_topk, lsh_topk
 from ape_dts_spark.operators.text_analysis import language_id, quality_score, token_stats
 from ape_dts_spark.operators.text_dedup import (
+    _byte_string,
+    _drop_hot_keys,
+    contaminated_train_docs,
+    decontaminate,
     exact_duplicates,
     lsh_candidate_pairs,
     minhash_signatures,
+    minhash_signatures_fused,
     ngram_jaccard_pairs,
     simhash,
     simhash_near_dups,
@@ -674,6 +680,99 @@ def test_near_dup_skew_caps_bound_quadratic_blowup(spark):
     assert time.monotonic() - t0 < 180
 
 
+# The frequency-cap guards (lsh max_bucket, jaccard/decontaminate
+# max_doc_freq) must NOT be window counts: count() OVER (PARTITION BY
+# hot_key) gets no partial aggregation and cannot be AQE-skew-split, so the
+# megakey the cap exists to drop first lands whole on one task.  The
+# groupBy + left_anti form is identical in output; these tests pin both the
+# plan shape (no Window node) and the row-level equivalence.
+
+
+def _physical(df) -> str:
+    return df._jdf.queryExecution().executedPlan().toString()
+
+
+def _docs(spark, rows):
+    return spark.createDataFrame(rows, "doc_id long, text string")
+
+
+BOILER = "the quick brown fox jumps over the lazy dog again and again"
+
+
+def test_drop_hot_keys_equals_window_form(spark):
+    """groupBy+anti must keep/drop exactly the rows the window form did."""
+    rows = [(i, "hot") for i in range(50)] + [(i + 100, f"k{i % 7}") for i in range(30)]
+    df = spark.createDataFrame(rows, "id long, key string")
+    got = {tuple(r) for r in _drop_hot_keys(df, ["key"], 10).collect()}
+    w = Window.partitionBy("key")
+    want = {
+        tuple(r)
+        for r in df.withColumn("_n", F.count(F.lit(1)).over(w))
+        .filter(F.col("_n") <= 10)
+        .drop("_n")
+        .collect()
+    }
+    assert got == want and len(got) == 30
+
+
+def test_frequency_caps_have_no_window_node(spark):
+    """None of the four capped operators may plan a Window for the cap."""
+    docs = _docs(spark, [(i, BOILER + f" doc {i}") for i in range(6)])
+    sig = minhash_signatures_fused(docs, num_hashes=8)
+    plans = {
+        "lsh": _physical(lsh_candidate_pairs(sig, num_hashes=8, bands=4, max_bucket=3)),
+        "jaccard": _physical(ngram_jaccard_pairs(docs, k=3, threshold=0.1, max_doc_freq=3)),
+        "decon": _physical(decontaminate(docs, docs, k=3, max_doc_freq=3)),
+        "train_drop": _physical(contaminated_train_docs(docs, docs, k=3, max_doc_freq=3)),
+    }
+    for name, plan in plans.items():
+        assert "Window" not in plan, f"{name} cap regressed to a window:\n{plan}"
+        assert "LeftAnti" in plan or "partial_count" in plan.lower() or "partial" in plan, name
+
+
+def test_lsh_cap_drops_megabucket_identically(spark):
+    """Planted megabucket: 20 byte-identical docs (one band bucket of 20)
+    plus a 2-doc near-pair.  cap=8 must drop the megabucket's pairs whole
+    and keep the small bucket's pair — same rows as the (removed) window
+    form, which the DuckDB oracle still mirrors."""
+    mega = [(i, BOILER) for i in range(20)]
+    pairX = [(100, "alpha beta gamma delta epsilon zeta"), (101, "alpha beta gamma delta epsilon zeta")]
+    sig = minhash_signatures_fused(_docs(spark, mega + pairX), num_hashes=8)
+    capped = {
+        (r["a"], r["b"])
+        for r in lsh_candidate_pairs(sig, num_hashes=8, bands=4, max_bucket=8).collect()
+    }
+    assert capped == {(100, 101)}
+    uncapped = lsh_candidate_pairs(sig, num_hashes=8, bands=4, max_bucket=None).count()
+    assert uncapped == 20 * 19 // 2 + 1
+
+
+def test_decontaminate_cap_fused_into_vocab_agg(spark):
+    """With the cap, the train vocab is ONE groupBy (doc-freq filter fused);
+    a stop-shingle in every train doc must not count as contamination."""
+    train = _docs(spark, [(i, f"unique text number {i} " + BOILER) for i in range(10)])
+    evalset = _docs(spark, [(1, BOILER)])
+    rep = decontaminate(train, evalset, k=3, threshold=0.5, max_doc_freq=5).collect()[0]
+    assert rep["n_matched"] == 0 and not rep["contaminated"]
+    exact = decontaminate(train, evalset, k=3, threshold=0.5, max_doc_freq=None).collect()[0]
+    assert exact["contaminated"]
+
+
+def test_byte_string_suffixes():
+    """_byte_string parses Spark size-conf suffixes (digit-stripping once
+    turned '128m' into 128 bytes)."""
+    assert _byte_string("134217728") == 134217728
+    assert _byte_string("128m") == 128 * 1024 * 1024
+    assert _byte_string("128MB") == 128 * 1024 * 1024
+    assert _byte_string("1g") == 1 << 30
+    assert _byte_string("512k") == 512 * 1024
+    assert _byte_string("64b") == 64
+    assert _byte_string("2t") == 2 << 40
+    assert _byte_string("garbage") == 134217728
+    assert _byte_string("12x") == 134217728
+    assert _byte_string("") == 134217728
+
+
 def test_url_canonicalization_rules(spark):
     """Canonical form: fragment stripped, scheme+host lowercased (path case
     kept), DEFAULT ports only stripped, bare '?' dropped, root slash dropped,
@@ -819,6 +918,46 @@ def test_url_host_stops_at_fragment(spark):
     }
     assert out[1].h == "example.co.uk" and out[1].d == "example.co.uk"
     assert out[2].h == "h.com" and out[3].h == "h.org"
+
+
+def test_psl_wildcard_and_exception_rules(spark):
+    """*.ck wildcard: any label under ck is a public suffix, so the
+    registered domain is the last THREE labels and a bare 2-label host has
+    no registrable domain; !www.ck exception: registrable as-is.  Checked
+    on BOTH engines from the same snapshot literals."""
+    import duckdb
+    import pandas as pd
+
+    from ape_dts_spark.operators.url_tools import (
+        registered_domain_from_host,
+        registered_domain_sql,
+    )
+
+    cases = {
+        "foo.bar.ck": "foo.bar.ck",   # bar.ck is a suffix (wildcard)
+        "x.foo.bar.ck": "foo.bar.ck",
+        "bar.ck": "",                 # a public suffix itself
+        "ck": "",
+        "www.ck": "www.ck",           # exception: registrable as-is
+        "a.www.ck": "www.ck",
+        "shop.er": "",                # *.er, no exception
+        "b.shop.er": "b.shop.er",
+        "news.fk": "",
+        "a.news.fk": "a.news.fk",
+        "foo.co.uk": "foo.co.uk",     # plain rules unaffected
+        "plain.com": "plain.com",
+    }
+    df = spark.createDataFrame([(h,) for h in cases], "host string")
+    got = {
+        r["host"]: r["d"]
+        for r in df.select("host", registered_domain_from_host(F.col("host")).alias("d")).collect()
+    }
+    assert got == cases
+    con = duckdb.connect()
+    con.register("hosts", pd.DataFrame({"host": list(cases)}))
+    sql = f"SELECT host, {registered_domain_sql('host')} AS d FROM hosts"
+    want = dict(con.execute(sql).fetchall())
+    assert want == cases
 
 
 def test_quantize_embeddings_roundtrip_and_error_bound(spark):

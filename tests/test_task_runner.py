@@ -1,11 +1,15 @@
 """Multi-table TaskRunner tests (table filter pruning, parallel per-table
 engines sharing one session, fault isolation)."""
 
+import os
+
 from pyspark.sql import functions as F
 
+from ape_dts_spark.functions.extract_text import extract_text_udf
 from ape_dts_spark.lake.table import LakeTable
 from ape_dts_spark.operators.filters import TableFilter
 from ape_dts_spark.sources.generator import PAGES_COLS, gen_changes, gen_pages_seed
+from ape_dts_spark.streaming.driver import EngineConfig
 from ape_dts_spark.streaming.task_runner import MultiTableConfig, TableTask, run_multi_table
 
 
@@ -56,3 +60,35 @@ def test_multi_table_fault_isolation(spark, tmp_path):
     assert out["results"]["web.ok"]["ok"]
     assert not out["results"]["web.bad"]["ok"]
     assert not out["all_ok"]
+
+
+def test_multi_table_template_paths_are_per_table(spark, tmp_path):
+    tasks = []
+    for name in ("web.t1", "web.t2"):
+        sub = tmp_path / name.replace(".", "_")
+        t = LakeTable.create(str(sub / "pages"), PAGES_COLS, bucket_key="url", bucket_count=4)
+        t.append(
+            gen_pages_seed(spark, 20, seed=7).withColumn("text", extract_text_udf(F.col("html")))
+        )
+        gen_changes(spark, 40, 20, seed=7).drop("fetch_status").write.parquet(
+            str(sub / "changes")
+        )
+        tasks.append(TableTask(name=name, pages_path=t.path, changes_path=str(sub / "changes")))
+    ckpt, lin = str(tmp_path / "ckpt"), str(tmp_path / "lin")
+    mcfg = MultiTableConfig(
+        job_id="mt",
+        tables=tasks,
+        tb_parallel_size=2,
+        engine_defaults=EngineConfig(
+            job_id="mt", pages_path="", changes_path="",
+            checkpoints_path=ckpt, lineage_path=lin,
+        ),
+    )
+    out = run_multi_table(spark, mcfg)
+    assert out["all_ok"], out["results"]
+    # explicit template paths are parents: one child table per lane, so
+    # concurrent lanes never race on a shared manifest
+    for name in ("web.t1", "web.t2"):
+        assert LakeTable.exists(os.path.join(ckpt, name))
+        assert LakeTable.exists(os.path.join(lin, name))
+    assert not LakeTable.exists(ckpt)
