@@ -78,6 +78,7 @@ def main(argv: list[str] | None = None) -> int:
 
     from ape_dts_spark.config import load_task_config
     from ape_dts_spark.lake.table import LakeTable
+    from ape_dts_spark.sources.change_log import ChangeLog
     from ape_dts_spark.sources.generator import PAGES_COLS
     from ape_dts_spark.streaming.driver import CdcEngine
     from ape_dts_spark.streaming.snapshot import snapshot_complete, snapshot_load
@@ -203,17 +204,9 @@ def main(argv: list[str] | None = None) -> int:
         tbl_max = (
             table.read(spark).agg(F.max("last_lsn").alias("m")).collect()[0]["m"] or 0
         )
-        stream_max = 0
-        if cfg.changes_path:
-            try:
-                stream_max = (
-                    spark.read.parquet(cfg.changes_path)
-                    .agg(F.max("lsn").alias("m"))
-                    .collect()[0]["m"]
-                    or 0
-                )
-            except Exception:
-                stream_max = 0  # revise without a tail stream is legal
+        # the stream max from the change files' footers; revise without a
+        # tail stream is legal (a missing directory lists no file)
+        stream_max = ChangeLog(cfg.changes_path).refresh().max_lsn() if cfg.changes_path else 0
         next_lsn = max(tbl_max, stream_max)
         changes = fixes.withColumn("op", F.lit("update")).withColumn(
             "lsn", F.lit(next_lsn).cast("long")

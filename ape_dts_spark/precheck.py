@@ -18,6 +18,7 @@ from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
 from ape_dts_spark.lake.table import LakeTable
+from ape_dts_spark.sources.change_log import ChangeLog
 from ape_dts_spark.streaming.driver import EngineConfig
 
 VALID_OPS = {"insert", "update", "delete"}
@@ -47,31 +48,30 @@ def precheck(spark: SparkSession, cfg: EngineConfig, deep: bool = False) -> dict
             raise PrecheckError(f"pages table lacks required column {col}")
     report["pages_version"] = pages.version
 
+    # fast path: columns, count and lsn range come from the footers (the
+    # engine's source log, no Spark job); the LSN-uniqueness check needs a
+    # countDistinct SHUFFLE over the whole stream — at the 10^10-event
+    # design point that is minutes of cluster time before any run starts,
+    # so it lives behind deep like the op scan
     try:
-        changes = spark.read.parquet(cfg.changes_path)
+        log = ChangeLog(cfg.changes_path).refresh()
     except Exception as e:
         raise PrecheckError(f"change stream unreadable at {cfg.changes_path}: {e}") from e
-    missing = required_change_cols(cfg) - set(changes.columns)
+    if not log.files:
+        raise PrecheckError(f"change stream unreadable at {cfg.changes_path}: no data files")
+    missing = required_change_cols(cfg) - set(log.columns())
     if missing:
         raise PrecheckError(f"change stream lacks columns {sorted(missing)}")
-
-    # fast path: count + min/max are footer-served partial aggs (no shuffle);
-    # the LSN-uniqueness check needs a countDistinct SHUFFLE over the whole
-    # stream — at the 10^10-event design point that is minutes of cluster
-    # time before any run starts, so it lives behind deep like the op scan
-    aggs = [
-        F.count(F.lit(1)).alias("n"),
-        F.min("lsn").alias("lsn_min"),
-        F.max("lsn").alias("lsn_max"),
-    ]
+    ranged = [f for f in log.files if f.lsn_max is not None]
+    report["n"] = sum(f.rows for f in log.files)
+    report["lsn_min"] = min((f.lsn_min for f in ranged), default=None)
+    report["lsn_max"] = max((f.lsn_max for f in ranged), default=None)
     if deep:
-        aggs.append(F.countDistinct("lsn").alias("n_lsn"))
-    agg = changes.agg(*aggs).collect()[0]
-    report.update({k: agg[k] for k in ("n", "lsn_min", "lsn_max")})
-    if deep:
-        report["n_lsn"] = agg["n_lsn"]
-        if agg["n"] != agg["n_lsn"]:
-            raise PrecheckError(f"duplicate LSNs: {agg['n']} rows, {agg['n_lsn']} distinct")
+        changes = spark.read.parquet(cfg.changes_path)
+        n_lsn = changes.agg(F.countDistinct("lsn")).collect()[0][0]
+        report["n_lsn"] = n_lsn
+        if report["n"] != n_lsn:
+            raise PrecheckError(f"duplicate LSNs: {report['n']} rows, {n_lsn} distinct")
         # NULL satisfies neither isin nor its negation — check it explicitly
         # or a corrupt extract with op=NULL sails through
         bad_ops = (
@@ -89,9 +89,9 @@ def precheck(spark: SparkSession, cfg: EngineConfig, deep: bool = False) -> dict
         row = cp.filter(F.col("job_id") == cfg.job_id).agg(F.max("hwm_lsn").alias("h")).collect()[0]
         hwm = row["h"] or 0
         report["resume_hwm"] = hwm
-        if agg["lsn_max"] is not None and hwm > agg["lsn_max"]:
+        if report["lsn_max"] is not None and hwm > report["lsn_max"]:
             raise PrecheckError(
-                f"checkpoint hwm {hwm} is ahead of stream end {agg['lsn_max']} "
+                f"checkpoint hwm {hwm} is ahead of stream end {report['lsn_max']} "
                 "(source truncated/rotated?)"
             )
 

@@ -5,7 +5,8 @@ docs/en/monitor/position.md:5-12) and DDL barrier (base_extractor.rs:118-124,
 base_pipeline.rs:198-222).
 
 One batch = one LSN slice (hwm, hi]:
-  read slice (predicate pushed into the scan)
+  read slice (only the change files whose lsn range meets (hwm, hi], listed
+  by the driver-side source log; the lsn predicate pushed into the scan)
   -> filter/route (ChangeFilter, Router)
   -> split key-changing updates into delete+insert
   -> quarantine NULL-key rows
@@ -39,7 +40,7 @@ from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from ape_dts_spark.functions.extract_text import extract_text_udf
-from ape_dts_spark.lake.table import _WIDEN_OK, BUCKET_COL, LakeTable, spark_type
+from ape_dts_spark.lake.table import BUCKET_COL, LakeTable, spark_type
 from ape_dts_spark.operators.dedup import (
     lww_dedup,
     lww_dedup_bucket_aligned,
@@ -48,16 +49,14 @@ from ape_dts_spark.operators.dedup import (
 )
 from ape_dts_spark.operators.filters import ChangeFilter, Router
 from ape_dts_spark.operators.merge import merge_into
+from ape_dts_spark.sources.change_log import ChangeLog
 
 _LOG = logging.getLogger(__name__)
 
-#: widen pairs mapped to Spark typeName() strings — the promote whitelist IS
-#: widen_column's whitelist (a literal copy here drifted, r4 ADVICE)
-_PROMOTE = {(spark_type(a).typeName(), spark_type(b).typeName()) for a, b in _WIDEN_OK}
-#: pairs Spark's parquet reader up-casts AT SCAN TIME (probed on this engine:
-#: every _WIDEN_OK pair EXCEPT long->double, whose 64-bit mantissa cannot
-#: widen losslessly into double's 52)
-_READER_PROMOTE = _PROMOTE - {("long", "double")}
+#: at most this many buckets are compacted after any one batch — bounds the
+#: per-batch maintenance stall and amortizes compaction across the tail
+#: instead of a whole-table stop-the-world rewrite
+COMPACT_MAX_BUCKETS = 16
 
 CHECKPOINT_COLS = [
     ("job_id", "string"),
@@ -129,15 +128,11 @@ class EngineConfig:
     # compact a bucket when its delta bytes exceed this fraction of the
     # bucket's total bytes; <= 0 disables auto-compaction
     compact_ratio: float = 0.5
-    # at most this many buckets are compacted after any one batch — bounds
-    # the per-batch maintenance stall and amortizes compaction across the
-    # tail instead of a whole-table stop-the-world rewrite
-    compact_max_buckets: int = 16
     # per-fold byte budget: one maybe_compact call rewrites at most ~this
     # many bytes (sum of base+delta of the selected buckets).  Bucket COUNT
     # alone doesn't bound the stall — the FIRST fold after a seed load hits
-    # max_buckets buckets whose accumulated bytes dwarf steady-state deltas
-    # (measured 50.3s vs 8-16s steady in BENCH/endurance_10M_r3.json).  The
+    # COMPACT_MAX_BUCKETS buckets whose accumulated bytes dwarf steady-state
+    # deltas (measured 50.3s vs 8-16s steady in BENCH/endurance_10M_r3.json).  The
     # largest-delta bucket is always folded even when it alone exceeds the
     # budget (otherwise it could starve forever).  0 = unbounded.
     compact_byte_budget: int = 512 << 20
@@ -292,7 +287,7 @@ def maybe_compact(
     spark: SparkSession, pages: LakeTable, cfg: "EngineConfig"
 ) -> dict | None:
     """Incremental MOR maintenance: compact the hottest buckets (per-bucket
-    delta fraction above cfg.compact_ratio), at most cfg.compact_max_buckets
+    delta fraction above cfg.compact_ratio), at most COMPACT_MAX_BUCKETS
     per call.  Bounded per-batch work — at 10^10 events a whole-table
     compaction is a multi-minute stall; per-bucket folding keeps the tail
     latency flat while converging to the same state.
@@ -318,7 +313,7 @@ def maybe_compact(
     sel: list[int] = []
     cost = 0
     for b, _ in cand:
-        if len(sel) >= max(1, cfg.compact_max_buckets):
+        if len(sel) >= COMPACT_MAX_BUCKETS:
             break
         fold_cost = per[b]["base"] + per[b]["delta"]
         if sel and budget > 0 and cost + fold_cost > budget:
@@ -452,6 +447,7 @@ class CdcEngine:
             "batches": 0,
         }
         self._ddls = getattr(self, "_ddls", None) or self._load_ddls()
+        self.log = ChangeLog(cfg.changes_path)
         self._cidx = None
         if cfg.content_index_path and self.stopped_reason is None:
             from ape_dts_spark.operators.incremental_dedup import ContentIndex
@@ -547,192 +543,25 @@ class CdcEngine:
         row = df.agg(F.max("hwm_lsn").alias("h"), F.max("batch_id").alias("b")).collect()[0]
         return (row["h"] or 0), (row["b"] if row["b"] is not None else -1)
 
-    def _changes(self) -> DataFrame:
-        # schema inference reads parquet footers = one driver job; do it once
-        # per engine — NOT once per batch (fixed per-batch cost kills the
-        # scaling of short batches) — and re-do it after every schema DDL
-        # (_apply_ddl invalidates the cache): files written after an
-        # add_column carry the new column, and a schema pinned from a pre-DDL
-        # footer would silently null it into the sink.
-        if not hasattr(self, "_changes_schema"):
-            self._changes_schema = self._infer_changes_schema()
-        sch = self._changes_schema
-        if isinstance(sch, tuple) and sch[0] == "grouped":
-            # unreconcilable footer mix (see _infer_changes_schema): one scan
-            # per footer group, cast to the shared target, union.  Group
-            # count is bounded by DDL count, so this is a handful of scans.
-            # Built PER CALL from a fresh listing (a live tail appends new
-            # files between batches — freezing the file list at inference
-            # time would silently drop them; the per-file footer cache keeps
-            # the re-listing incremental: only unseen files pay a read).
-            return self._read_changes_grouped(sch[1])
-        return self.spark.read.schema(sch).parquet(self.cfg.changes_path)
-
-    def _read_changes_grouped(self, target):
-        from pyspark.sql import types as T
-
-        parts = []
-        for g_schema, files in self._changes_footer_groups():
-            gtypes = {f.name: f.dataType for f in g_schema.fields}
-            # read with the target schema EXCEPT reader-unsupported columns,
-            # which stay at the footer type and are cast after the scan
-            read_fields = []
-            for f in target.fields:
-                ft = gtypes.get(f.name, f.dataType)
-                ok = ft == f.dataType or (
-                    (ft.typeName(), f.dataType.typeName()) in _READER_PROMOTE
-                )
-                read_fields.append(T.StructField(f.name, f.dataType if ok else ft, True))
-            part = self.spark.read.schema(T.StructType(read_fields)).parquet(*files)
-            parts.append(
-                part.select(
-                    [F.col(f.name).cast(f.dataType).alias(f.name) for f in target.fields]
-                )
-            )
-        out = parts[0]
-        for part in parts[1:]:
-            out = out.unionByName(part)
-        return out
-
-    def _infer_changes_schema(self):
-        """Footer-MERGED inference: single-footer inference (mergeSchema off)
-        reads whichever file Spark samples, so a stream whose later files
-        carry DDL-added columns loses them.  When merging fails on numeric
-        width mixes (a widen_column mid-stream leaves int32/int64 footers
-        that StructType.merge rejects), fall back to name-reconciled
-        inference over ALL footers: widen numerics to the sink schema's type
-        (the promote whitelist IS widen_column's _WIDEN_OK — a literal copy
-        here drifted, r4 ADVICE) and add DDL-announced columns the footers
-        lacked.  When every footer->target pair is one the parquet reader
-        promotes at scan time (_READER_PROMOTE) the result is a single
-        explicit read schema; otherwise returns ("grouped", target) and
-        _changes() takes per-footer-group reads cast to the target — the
-        same per-file-group cast the sink read path uses — because no single
-        read schema can decode an int64/double mix.
-
-        The footer listing is a driver-side pass over the stream's files,
-        but only on this exception path; the per-file footer cache keeps
-        repeat listings incremental (each new footer is a kilobyte-range
-        read)."""
-        try:
-            return (
-                self.spark.read.option("mergeSchema", "true")
-                .parquet(self.cfg.changes_path)
-                .schema
-            )
-        except Exception:
-            pass
-        from pyspark.sql import types as T
-
-        promote = _PROMOTE
-        reader_promote = _READER_PROMOTE
-
-        sink = {f["name"]: spark_type(f["type"]) for f in self.pages.schema.fields}
-        groups = self._changes_footer_groups()
-        # target type per column: the sink's type when every footer type
-        # widens to it (or matches); otherwise the footer type itself
-        footer_types: dict[str, set] = {}
-        order: list[str] = []
-        for g_schema, _files in groups:
-            for f in g_schema.fields:
-                if f.name not in footer_types:
-                    footer_types[f.name] = set()
-                    order.append(f.name)
-                footer_types[f.name].add(f.dataType)
-        fields, seen = [], set()
-        for name in order:
-            cands = footer_types[name]
-            t = sink.get(name)
-            if t is None or not all(
-                ft == t or (ft.typeName(), t.typeName()) in promote for ft in cands
-            ):
-                # no widen target: keep the widest footer type (the one every
-                # other footer type promotes to), or the single type
-                t = next(
-                    (
-                        c
-                        for c in cands
-                        if all(
-                            o == c or (o.typeName(), c.typeName()) in promote
-                            for o in cands
-                        )
-                    ),
-                    next(iter(cands)),
-                )
-            fields.append(T.StructField(name, t, True))
-            seen.add(name)
-        # columns an add_column DDL announced but every footer predates
-        # (ONLY those: adding arbitrary sink columns would project phantom
-        # NULLs over real values in the merge)
-        for d in self._ddls:
-            if d["ddl_type"] != "add_column":
-                continue
-            p = json.loads(d["payload"])
-            if p["col"] not in seen:
-                fields.append(T.StructField(p["col"], spark_type(p["type"]), True))
-                seen.add(p["col"])
-        target = T.StructType(fields)
-        tmap = {f.name: f.dataType for f in target.fields}
-        if all(
-            ft == tmap[n] or (ft.typeName(), tmap[n].typeName()) in reader_promote
-            for n, cs in footer_types.items()
-            for ft in cs
-        ):
-            return target  # one scan decodes every file
-        return ("grouped", target)
-
-    def _changes_footer_groups(self):
-        """[(footer_schema, [files])] for the changes dir, grouped by footer
-        schema (distinct groups are bounded by the DDL count).  Driver-side
-        pyarrow footer reads — used only on the mixed-footer exception path,
-        and incremental: already-seen files hit the per-path cache."""
-        import pyarrow.parquet as pq
-
-        cache = self.__dict__.setdefault("_footer_schema_cache", {})
-        files = self.spark.read.parquet(self.cfg.changes_path).inputFiles()
-        groups: dict[str, list] = {}
-        schemas: dict[str, object] = {}
-        for uri in files:
-            sch = cache.get(uri)
-            if sch is None:
-                path = uri[7:] if uri.startswith("file://") else uri
-                sch = self._footer_schema(pq, path)
-                cache[uri] = sch
-            key = sch.simpleString()
-            groups.setdefault(key, []).append(uri)
-            schemas[key] = sch
-        return [(schemas[k], v) for k, v in groups.items()]
-
-    @staticmethod
-    def _footer_schema(pq, path):
-        """Parquet footer -> Spark StructType via an empty-batch Arrow read
-        (pyarrow's types map 1:1 onto Spark's for the engine's column set)."""
-        from pyspark.sql.pandas.types import from_arrow_type
-        from pyspark.sql import types as T
-
-        arrow = pq.read_schema(path)
-        return T.StructType(
-            [T.StructField(f.name, from_arrow_type(f.type), True) for f in arrow]
-        )
-
-    def _has_change_files(self) -> bool:
-        """Whether changes_path holds a data file, by a driver-side listing
-        (no Spark job).  Names the parquet reader skips (``_SUCCESS``,
-        ``.crc`` files, ``_``/``.`` directories) do not count."""
-        import os
-
-        path = self.cfg.changes_path
-        if os.path.isfile(path):
-            return True
-        for _root, dirs, files in os.walk(path):
-            dirs[:] = [d for d in dirs if not d.startswith(("_", "."))]
-            if any(not f.startswith(("_", ".")) for f in files):
-                return True
-        return False
-
     def max_lsn(self) -> int:
-        row = self._changes().agg(F.max("lsn")).collect()[0]
-        return row[0] or 0
+        """Highest published lsn (0 when none), from the source log's footer
+        statistics: a listing plus the footers of new files, no Spark job."""
+        return self.log.refresh().max_lsn()
+
+    def _slice(self, lo: int, hi: int) -> DataFrame:
+        """The change events with lo < lsn <= hi, scanning only the files
+        whose lsn range meets the slice.  The read schema is worked out per
+        call from the log's footers and the current sink schema, so files
+        appended since the last call (DDL-added columns included) are
+        always read with their columns."""
+        self.log.refresh()
+        sink = {f["name"]: spark_type(f["type"]) for f in self.pages.schema.fields}
+        added = {}
+        for d in self._ddls:
+            if d["ddl_type"] == "add_column":
+                p = json.loads(d["payload"])
+                added[p["col"]] = spark_type(p["type"])
+        return self.log.read(self.spark, lo, hi, self.log.read_schema(sink, added))
 
     # ------------------------------------------------------------- main loop
 
@@ -751,19 +580,15 @@ class CdcEngine:
                 "metrics": dict(self.metrics),
                 "stopped_reason": self.stopped_reason,
             }
-        # each run() consumes files present NOW (end is pinned below) — files
-        # appended since the last run may carry DDL-added columns, so the
-        # cached change-stream schema is only trusted within one run
-        self.__dict__.pop("_changes_schema", None)
         hwm, last_batch = self.committed_hwm()
         if last_batch < 0 and self.cfg.start_lsn > hwm:
             hwm = self.cfg.start_lsn  # fresh job: begin after the configured position
-        if not self._has_change_files():
-            # empty poll: nothing published yet, so there is no schema to
-            # infer and no position to reach; pending DDL waits for changes
+        end = self.max_lsn()
+        if not self.log.files:
+            # empty poll: nothing published yet, so there is no position to
+            # reach; pending DDL waits for changes
             end = hwm
         else:
-            end = self.max_lsn()
             pending_ddl_lsns = [d["lsn"] for d in self._ddls]
             if pending_ddl_lsns:
                 end = max(end, max(pending_ddl_lsns))
@@ -889,14 +714,13 @@ class CdcEngine:
         if hwm_prop is None and props.get("job_id") == cfg.job_id:
             hwm_prop = props.get("hwm_lsn")
         already_applied = int(hwm_prop or 0) >= hi
-        slice_df = self._changes().filter((F.col("lsn") > lo) & (F.col("lsn") <= hi))
+        slice_df = self._slice(lo, hi)
         obs = Observation()
         input_metrics = (
             F.count(F.lit(1)).alias("records"),
             F.sum(F.coalesce(F.length("html"), F.lit(0))).alias("bytes"),
         )
-        slice_df = slice_df.observe(obs, *input_metrics)
-        deduped = prepare_changes(self.pages, slice_df, cfg)
+        deduped = prepare_changes(self.pages, slice_df.observe(obs, *input_metrics), cfg)
 
         cd_fresh = nd_fresh = nd_rows = None
         cd_dropped = nd_dropped = 0
@@ -1013,12 +837,7 @@ class CdcEngine:
                     # unresolved Observation (an empty slice; also seen on a
                     # first batch with both sidecar indexes on): one bounded
                     # aggregate job over the slice computes the same metrics
-                    got = (
-                        self._changes()
-                        .filter((F.col("lsn") > lo) & (F.col("lsn") <= hi))
-                        .agg(*input_metrics)
-                        .collect()[0]
-                    )
+                    got = slice_df.agg(*input_metrics).collect()[0]
                     input_records = int(got["records"])
                     input_bytes = int(got["bytes"] or 0)
                 self.metrics["record_count"] += input_records
@@ -1127,9 +946,6 @@ class CdcEngine:
         t = ddl["ddl_type"]
         if t in self.LIFECYCLE_DDL:
             return self._apply_lifecycle_ddl(t, p)
-        # files written after this DDL may carry the evolved columns — drop
-        # the cached change-stream schema so the next batch re-infers
-        self.__dict__.pop("_changes_schema", None)
         try:
             if t == "add_column":
                 self.pages.add_column(p["col"], p["type"])

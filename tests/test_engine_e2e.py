@@ -390,7 +390,7 @@ def test_infer_changes_schema_widen_long_double_restart(spark, tmp_path):
         spark, EngineConfig(job_id="j", pages_path=str(tmp_path / "pages"), changes_path=ch)
     )
     eng._ddls = []
-    df = eng._changes()
+    df = eng._slice(0, eng.max_lsn())
     assert dict((f.name, f.dataType) for f in df.schema.fields)["score"] == T.DoubleType()
     rows = {r["url"]: r["score"] for r in df.collect()}
     assert rows == {"u1": 100.0, "u2": 1.5}
@@ -399,7 +399,7 @@ def test_infer_changes_schema_widen_long_double_restart(spark, tmp_path):
     spark.createDataFrame(
         [(3, "insert", "u3", 250)], "lsn long, op string, url string, score long"
     ).write.parquet(ch, mode="append")
-    rows2 = {r["url"]: r["score"] for r in eng._changes().collect()}
+    rows2 = {r["url"]: r["score"] for r in eng._slice(0, eng.max_lsn()).collect()}
     assert rows2 == {"u1": 100.0, "u2": 1.5, "u3": 250.0}
 
 
@@ -422,8 +422,90 @@ def test_infer_changes_schema_widen_int_long_single_scan(spark, tmp_path):
         spark, EngineConfig(job_id="j", pages_path=str(tmp_path / "pages"), changes_path=ch)
     )
     eng._ddls = []
-    sch = eng._infer_changes_schema()
+    files = eng.log.refresh().files
+    sch = eng.log.scan_schema(eng._slice(0, eng.max_lsn()).schema, files)
     assert isinstance(sch, T.StructType)  # single-scan fast path
     assert dict((f.name, f.dataType) for f in sch.fields)["n"] == T.LongType()
-    rows = {r["url"]: r["n"] for r in eng._changes().collect()}
+    rows = {r["url"]: r["n"] for r in eng._slice(0, eng.max_lsn()).collect()}
     assert rows == {"u1": 7, "u2": 9}
+
+
+@pytest.mark.parametrize("case", ["ddl_straddle", "no_statistics", "zero_rows"])
+def test_slice_reads_only_overlapping_files(spark, tmp_path, case):
+    """The source log hands batch (lo, hi] exactly the change files whose lsn
+    range meets it: the file straddling the DDL barrier goes to the batches
+    on both sides, a file without lsn statistics is placed by its lsn
+    column, a zero-row file goes to none.  The applied table equals the
+    oracle replay of the whole directory."""
+    import os
+
+    import pyarrow.parquet as pq
+
+    staged = str(tmp_path / "staged")
+    gen_changes(spark, 60, SMALL_SEED, seed=7).coalesce(1).write.parquet(staged)
+    tbl = pq.read_table(staged).sort_by("lsn")
+    ch = tmp_path / "changes"
+    ch.mkdir()
+    ranges = {}  # file name -> (first lsn, last lsn); None for no rows
+    for first, last in [(1, 20), (21, 40), (41, 60)]:
+        name = f"c-{first:03d}.parquet"
+        pq.write_table(
+            tbl.slice(first - 1, last - first + 1),
+            str(ch / name),
+            use_deprecated_int96_timestamps=True,
+            write_statistics=not (case == "no_statistics" and first == 21),
+        )
+        ranges[name] = (first, last)
+    if case == "zero_rows":
+        pq.write_table(
+            tbl.slice(0, 0), str(ch / "c-030.parquet"), use_deprecated_int96_timestamps=True
+        )
+        ranges["c-030.parquet"] = None
+    ddl = [(30, "add_column", '{"col":"fetch_status","type":"int"}')]
+    _write_ddls(spark, tmp_path / "ddl", ddl)
+    t = _small_pages(spark, tmp_path / "pages")
+    eng = CdcEngine(
+        spark,
+        EngineConfig(
+            job_id="slice",
+            pages_path=t.path,
+            changes_path=str(ch),
+            ddl_path=str(tmp_path / "ddl"),
+            batch_lsn_width=25,
+        ),
+    )
+    eng.run()
+    cuts = [(b["lo"], b["hi"]) for b in eng.batch_log]
+    assert cuts == [(0, 25), (25, 30), (30, 55), (55, 60)]
+    for lo, hi in cuts:
+        got = {os.path.basename(u) for u in eng._slice(lo, hi).inputFiles()}
+        want = {n for n, r in ranges.items() if r and r[1] > lo and r[0] <= hi}
+        assert got == want, (lo, hi)
+
+    seed_pd = gen_pages_seed(spark, SMALL_SEED, seed=7).toPandas()
+    ddls = [dict(zip(("lsn", "ddl_type", "payload"), d)) for d in ddl]
+    want = oracle_replay(seed_pd, pd.read_parquet(staged), ddls)
+    _assert_tables_equal(_pages_pd(spark, t), want)
+
+
+def test_poll_without_new_files_runs_no_change_scan(spark, tmp_path):
+    """A run() that finds no new change file runs no Spark job over the
+    change directory: its job count equals that of committed_hwm() alone."""
+    ch = str(tmp_path / "changes")
+    gen_changes(spark, 30, SMALL_SEED, seed=7).coalesce(1).write.parquet(ch)
+    t = _small_pages(spark, tmp_path / "pages")
+    eng = CdcEngine(spark, EngineConfig(job_id="poll", pages_path=t.path, changes_path=ch))
+    assert eng.run()["hwm"] == 30
+    sc = spark.sparkContext
+
+    def jobs(group, fn):
+        sc.setJobGroup(group, group)
+        try:
+            fn()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        return len(sc.statusTracker().getJobIdsForGroup(group))
+
+    hwm_jobs = jobs("poll-hwm", eng.committed_hwm)
+    assert hwm_jobs >= 1
+    assert jobs("poll-run", lambda: eng.run()) == hwm_jobs

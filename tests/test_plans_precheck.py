@@ -4,7 +4,13 @@ import pytest
 from pyspark.sql import functions as F
 
 from ape_dts_spark.lake.table import LakeTable
-from ape_dts_spark.plans.inspect import pushed_filters, scan_columns, wholestage_spans
+from ape_dts_spark.plans.inspect import (
+    _balanced_span,
+    _split_top,
+    pushed_filters,
+    scan_columns,
+    wholestage_spans,
+)
 from ape_dts_spark.precheck import PrecheckError, precheck
 from ape_dts_spark.sources.generator import PAGES_COLS, gen_changes
 from ape_dts_spark.streaming.driver import EngineConfig
@@ -230,3 +236,50 @@ def test_load_task_config_missing_file_raises(tmp_path):
 
     with pytest.raises(FileNotFoundError, match="task config"):
         load_task_config(str(tmp_path / "nope.ini"))
+
+
+# --------------------------------------------------- plan-string parsing
+
+
+def test_split_top_keeps_nested_brackets_whole():
+    body = "In(lang, [en,de]), IsNotNull(lang), GreaterThan(lsn,100)"
+    assert _split_top(body, "()[]") == [
+        "In(lang, [en,de])",
+        "IsNotNull(lang)",
+        "GreaterThan(lsn,100)",
+    ]
+
+
+def test_balanced_span_stops_at_matching_close():
+    txt = "PushedFilters: [In(lang, [en,de]), IsNotNull(lang)], ReadSchema: ..."
+    marker = "PushedFilters: ["
+    body = _balanced_span(txt, txt.find(marker) + len(marker), "[", "]")
+    assert body == "In(lang, [en,de]), IsNotNull(lang)"
+
+
+def test_pushed_filters_survive_in_list_values(spark, tmp_path):
+    # an isin() filter stringifies as In(lang, [en,de]) — a ']' INSIDE the
+    # PushedFilters body; a first-']' regex truncated the list here and
+    # dropped every filter after the In entry
+    gen_changes(spark, 500, 50, seed=1).write.parquet(str(tmp_path / "ch"))
+    df = spark.read.parquet(str(tmp_path / "ch")).filter(
+        F.col("lang").isin("en", "de") & (F.col("lsn") > 10)
+    )
+    pf = pushed_filters(df)
+    ins = [f for f in pf if f.startswith("In(")]
+    assert ins and all(f.endswith(")") for f in ins), pf
+    assert any("GreaterThan(lsn,10)" in f for f in pf), pf
+
+
+def test_scan_columns_handle_nested_and_parameterized_types(spark, tmp_path):
+    df = spark.range(5).select(
+        F.struct(F.col("id").alias("y")).alias("x"),
+        F.col("id").cast("decimal(10,2)").alias("d"),
+        F.lit("payload").alias("html"),
+    )
+    df.write.parquet(str(tmp_path / "t"))
+    rdf = spark.read.parquet(str(tmp_path / "t")).select("x", "d")
+    cols = scan_columns(rdf)
+    # nested struct<> must not truncate the list; decimal(10,2) must not
+    # split at its comma; pruning evidence (no html) must stay trustworthy
+    assert cols == [["x", "d"]], cols
