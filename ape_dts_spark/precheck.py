@@ -7,8 +7,9 @@ invariants a CDC run depends on:
 * the target pages table exists and has the merge key + last_lsn columns;
 * the change stream exists, has the required columns, and its LSNs are
   unique (the total-order assumption every LWW decision rests on);
-* the checkpoint high-watermark is not AHEAD of the available stream (a
-  truncated/rotated source — the reference's binlog-expired failure mode);
+* the committed high-watermark (the pages manifest's position) is not
+  AHEAD of the available stream (a truncated/rotated source — the
+  reference's binlog-expired failure mode);
 * DDL events, if present, are well-formed.
 """
 
@@ -18,8 +19,13 @@ from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
 from ape_dts_spark.lake.table import LakeTable
-from ape_dts_spark.sources.change_log import ChangeLog
-from ape_dts_spark.streaming.driver import EngineConfig
+from ape_dts_spark.sources.change_log import ChangeLog, list_data_files, read_ddls
+from ape_dts_spark.streaming.driver import (
+    CdcEngine,
+    EngineConfig,
+    committed_position,
+    misbound_lifecycle_error,
+)
 
 VALID_OPS = {"insert", "update", "delete"}
 
@@ -82,29 +88,26 @@ def precheck(spark: SparkSession, cfg: EngineConfig, deep: bool = False) -> dict
         if bad_ops:
             raise PrecheckError(f"invalid op value: {bad_ops[0]['op']!r}")
 
-    # resume-position sanity: checkpoint must not be ahead of the stream end
-    cp_path = cfg.checkpoints_path or cfg.pages_path.rstrip("/") + "_checkpoints"
-    if LakeTable.exists(cp_path):
-        cp = LakeTable.load(cp_path).read(spark)
-        row = cp.filter(F.col("job_id") == cfg.job_id).agg(F.max("hwm_lsn").alias("h")).collect()[0]
-        hwm = row["h"] or 0
-        report["resume_hwm"] = hwm
-        if report["lsn_max"] is not None and hwm > report["lsn_max"]:
-            raise PrecheckError(
-                f"checkpoint hwm {hwm} is ahead of stream end {report['lsn_max']} "
-                "(source truncated/rotated?)"
-            )
+    # resume-position sanity: the committed position must not be ahead of
+    # the stream end
+    hwm, _ = committed_position(pages, cfg.job_id)
+    report["resume_hwm"] = hwm
+    if report["lsn_max"] is not None and hwm > report["lsn_max"]:
+        raise PrecheckError(
+            f"checkpoint hwm {hwm} is ahead of stream end {report['lsn_max']} "
+            "(source truncated/rotated?)"
+        )
 
     if cfg.ddl_path:
         import json
 
-        ddl = spark.read.parquet(cfg.ddl_path)
-        for c in ("lsn", "ddl_type", "payload"):
-            if c not in ddl.columns:
-                raise PrecheckError(f"ddl stream lacks column {c}")
-        # the DDL stream is a small control stream (the engine collects it
-        # whole at init too) — validate every payload now, not mid-run
-        rows = ddl.select("ddl_type", "payload").collect()
+        if not list_data_files(cfg.ddl_path):
+            raise PrecheckError(f"ddl stream unreadable at {cfg.ddl_path}: no data files")
+        # the engine's own reader: validate every payload now, not mid-run
+        try:
+            rows = read_ddls(cfg.ddl_path)
+        except ValueError as e:
+            raise PrecheckError(str(e)) from e
         kinds = set()
         for r in rows:
             kinds.add(r["ddl_type"])
@@ -114,8 +117,6 @@ def precheck(spark: SparkSession, cfg: EngineConfig, deep: bool = False) -> dict
                 raise PrecheckError(
                     f"ddl payload for {r['ddl_type']!r} is not valid JSON: {e}"
                 ) from e
-        from ape_dts_spark.streaming.driver import CdcEngine
-
         lifecycle = kinds & CdcEngine.LIFECYCLE_DDL
         if lifecycle and not cfg.catalog_root:
             raise PrecheckError(
@@ -127,8 +128,6 @@ def precheck(spark: SparkSession, cfg: EngineConfig, deep: bool = False) -> dict
             # fail before any data moves, with the SAME invariant the engine
             # enforces mid-run (one spelling, shared helper — a drifted copy
             # here would let precheck pass what the driver later rejects)
-            from ape_dts_spark.streaming.driver import misbound_lifecycle_error
-
             for r in rows:
                 err = misbound_lifecycle_error(
                     r["ddl_type"],

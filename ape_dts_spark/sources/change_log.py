@@ -12,6 +12,8 @@ whether anything is published at all, the read schema, and the files a batch
 Listing follows Spark's file reader: names starting with ``_`` or ``.``
 (``_SUCCESS``, ``.crc`` files, ``_temporary/``) and in-flight
 ``._COPYING_`` files are skipped, and the path may name a single file.
+The DDL stream, a small control stream beside the changes, is listed the
+same way and read whole by ``read_ddls``.
 """
 
 from __future__ import annotations
@@ -62,6 +64,26 @@ def list_data_files(path: str) -> list[str]:
             if not f.startswith(("_", ".")) and not f.endswith("._COPYING_")
         )
     return sorted(out)
+
+
+#: the DDL stream's columns, one event per row
+DDL_COLS = ("lsn", "ddl_type", "payload")
+
+
+def read_ddls(path: str) -> list[dict]:
+    """Every event of the DDL stream at `path` as {lsn, ddl_type, payload},
+    in lsn order: a pyarrow read of its data files, no Spark job.  A missing
+    path lists nothing; a file lacking one of DDL_COLS raises ValueError."""
+    import pyarrow.parquet as pq
+
+    rows = []
+    for p in list_data_files(path):
+        with pq.ParquetFile(p) as pf:
+            missing = [c for c in DDL_COLS if c not in pf.schema_arrow.names]
+            if missing:
+                raise ValueError(f"ddl stream lacks column {missing[0]}")
+            rows.extend(pf.read(columns=list(DDL_COLS)).to_pylist())
+    return sorted(rows, key=lambda d: d["lsn"])
 
 
 def scan(spark: SparkSession, schema: T.StructType, files: list[ChangeFile]) -> DataFrame:

@@ -15,17 +15,21 @@ One batch = one LSN slice (hwm, hi]:
   -> merge-on-read delta append into the pages LakeTable
   -> lineage rows (per affected bucket) + checkpoint row (high-watermark)
 
-Exactly-once: the MERGE commit carries `hwm_lsn` in the table manifest; the
-checkpoint row is a second commit.  A crash between the two leaves the
-manifest ahead of the checkpoint — on resume the slice is replayed, the
-driver sees manifest.hwm >= slice end and skips the (already applied) MERGE,
-then re-writes the checkpoint.  Even without the skip, replay is a value-
-identical no-op because MERGE is idempotent on (url, lsn).
+Exactly-once: one commit carries the position.  The MERGE commit writes
+`hwm_lsn.{job_id}` and `batch_id.{job_id}` into the pages manifest together
+with the batch's rows, and a run resumes exactly there (`committed_hwm`), so
+no slice is read twice.  The checkpoint row written after it is an
+append-only audit log (`committed_at` per batch and heartbeat), never read
+on resume; a crash between the merge commit and that row leaves a
+non-barrier batch without it.
 
 DDL barrier: a DDL event at lsn L caps the batch at hi=L; changes with
 lsn <= L are merged first (drain-before-DDL), then the DDL is applied as a
-metadata-only schema commit, then the stream continues under the evolved
-schema.  DDL application is idempotent so replay after a crash is safe.
+metadata-only schema commit, then `ddl_lsn.{job_id}` = L is committed, then
+the stream continues under the evolved schema.  A resume whose position is
+a barrier lsn above that marker (a crash between the merge and the DDL)
+applies the group first; DDL application is idempotent, so a group cut
+short mid-way is safe to apply again.
 """
 
 from __future__ import annotations
@@ -49,7 +53,7 @@ from ape_dts_spark.operators.dedup import (
 )
 from ape_dts_spark.operators.filters import ChangeFilter, Router
 from ape_dts_spark.operators.merge import merge_into
-from ape_dts_spark.sources.change_log import ChangeLog
+from ape_dts_spark.sources.change_log import ChangeLog, read_ddls
 
 _LOG = logging.getLogger(__name__)
 
@@ -91,9 +95,9 @@ class EngineConfig:
     batch_lsn_width: int = 100_000  # maxOffsetsPerTrigger analog (DtQueue cap)
     # first-run start position (reference: resuming from a configured binlog
     # file/position or lsn, position.md:5-12 / task_config [extractor]
-    # binlog_position): a FRESH job (no committed checkpoint) begins the tail
-    # strictly AFTER this lsn; once any checkpoint exists it wins — a
-    # configured start never rewinds an established job.
+    # binlog_position): a FRESH job (no committed position) begins the tail
+    # strictly AFTER this lsn; once a merge has committed its position wins —
+    # a configured start never rewinds an established job.
     start_lsn: int = 0
     key_col: str = "url"
     filter: ChangeFilter = field(default_factory=ChangeFilter)
@@ -155,8 +159,8 @@ class EngineConfig:
     # Updates and deletes always pass through (key identity governs them),
     # which also means a url deleted and later re-inserted with content the
     # index has seen stays dropped — content is ingested once, ever.
-    # Crash window: merge commits first, then the index append — a crash
-    # between them replays as already_applied and skips the append, so
+    # Crash window: merge commits first (with the position), then the index
+    # append — a crash between them resumes after the merged slice, so
     # those hashes are missed (future identical content would be ingested
     # again).  Best-effort by design: the window can only under-drop,
     # never lose data.
@@ -251,6 +255,14 @@ def misbound_lifecycle_error(
             "events"
         )
     return None
+
+
+def committed_position(pages: LakeTable, job_id: str) -> tuple[int, int]:
+    """(hwm_lsn, batch_id) the job's last merge committed into `pages`,
+    (0, -1) before its first.  Keyed by job: a table fed by several jobs
+    (two-way sync, multi-source fan-in) keeps one position per job."""
+    props = pages.manifest.properties
+    return int(props.get(f"hwm_lsn.{job_id}", 0)), int(props.get(f"batch_id.{job_id}", -1))
 
 
 def emit_change_feed(
@@ -412,6 +424,7 @@ class CdcEngine:
         self.spark = spark
         self.cfg = cfg
         self.stopped_reason: str | None = None
+        self._ddls = read_ddls(cfg.ddl_path) if cfg.ddl_path else []
         if not LakeTable.exists(cfg.pages_path) and cfg.catalog_root:
             self._adopt_renamed_table()
         if not LakeTable.exists(cfg.pages_path) and self._stream_drops_bound():
@@ -446,7 +459,6 @@ class CdcEngine:
             "ddl_records": 0,
             "batches": 0,
         }
-        self._ddls = getattr(self, "_ddls", None) or self._load_ddls()
         self.log = ChangeLog(cfg.changes_path)
         self._cidx = None
         if cfg.content_index_path and self.stopped_reason is None:
@@ -490,7 +502,6 @@ class CdcEngine:
 
         name = os.path.basename(self.cfg.pages_path.rstrip("/"))
         chain = [name]
-        self._ddls = self._load_ddls()
         for d in self._ddls:
             if d["ddl_type"] == "rename_table":
                 p = json.loads(d["payload"])
@@ -508,7 +519,6 @@ class CdcEngine:
         reason a restart may legitimately find no table at pages_path."""
         import os
 
-        self._ddls = getattr(self, "_ddls", None) or self._load_ddls()
         names = {os.path.basename(self.cfg.pages_path.rstrip("/"))}
         db = (
             os.path.basename(self.cfg.catalog_root.rstrip("/"))
@@ -526,22 +536,11 @@ class CdcEngine:
                 return True
         return False
 
-    def _load_ddls(self) -> list[dict]:
-        if not self.cfg.ddl_path:
-            return []
-        rows = (
-            self.spark.read.parquet(self.cfg.ddl_path)
-            .select("lsn", "ddl_type", "payload")
-            .collect()
-        )
-        return sorted(({**r.asDict()} for r in rows), key=lambda d: d["lsn"])
-
     def committed_hwm(self) -> tuple[int, int]:
-        """(hwm_lsn, batch_id) of the last committed checkpoint (reference
-        checkpoint_position semantics: resume from last *committed* batch)."""
-        df = self.checkpoints.read(self.spark).filter(F.col("job_id") == self.cfg.job_id)
-        row = df.agg(F.max("hwm_lsn").alias("h"), F.max("batch_id").alias("b")).collect()[0]
-        return (row["h"] or 0), (row["b"] if row["b"] is not None else -1)
+        """(hwm_lsn, batch_id) of this job's last merge commit, read from the
+        pages manifest (reference checkpoint_position semantics: resume from
+        the last *committed* batch); no Spark job."""
+        return committed_position(self.pages.refresh(), self.cfg.job_id)
 
     def max_lsn(self) -> int:
         """Highest published lsn (0 when none), from the source log's footer
@@ -566,34 +565,25 @@ class CdcEngine:
     # ------------------------------------------------------------- main loop
 
     def run(self, max_batches: int | None = None) -> dict:
-        """Consume the change stream to its current end (snapshot+tail replay)."""
+        """Consume the change stream to its current end (snapshot+tail replay).
+        An engine constructed against an already-dropped table makes no
+        batch: the same clean stop the run that applied the drop DDL
+        reached."""
         t0 = time.monotonic()
-        if self.stopped_reason is not None:
-            # constructed against an already-dropped table: same clean stop
-            # the run that applied the drop DDL reached
-            return {
-                "batches": 0,
-                "hwm": 0,
-                "events": 0,
-                "wall_sec": 0.0,
-                "events_per_sec": 0.0,
-                "metrics": dict(self.metrics),
-                "stopped_reason": self.stopped_reason,
-            }
-        hwm, last_batch = self.committed_hwm()
-        if last_batch < 0 and self.cfg.start_lsn > hwm:
-            hwm = self.cfg.start_lsn  # fresh job: begin after the configured position
-        end = self.max_lsn()
-        if not self.log.files:
-            # empty poll: nothing published yet, so there is no position to
-            # reach; pending DDL waits for changes
-            end = hwm
-        else:
-            pending_ddl_lsns = [d["lsn"] for d in self._ddls]
-            if pending_ddl_lsns:
-                end = max(end, max(pending_ddl_lsns))
-        batch_id = last_batch
-        n = 0
+        hwm = end = n = 0
+        if self.stopped_reason is None:
+            hwm, batch_id = self.committed_hwm()
+            if batch_id < 0:
+                hwm = max(hwm, self.cfg.start_lsn)  # fresh job: start after start_lsn
+            else:
+                self._finish_barrier(batch_id, hwm)
+            end = self.max_lsn()
+            if not self.log.files:
+                # empty poll: nothing published yet, so there is no position to
+                # reach; pending DDL waits for changes
+                end = hwm
+            elif self._ddls:
+                end = max(end, self._ddls[-1]["lsn"])  # lsn order
         while hwm < end and self.stopped_reason is None:
             if max_batches is not None and n >= max_batches:
                 break
@@ -630,6 +620,27 @@ class CdcEngine:
             "metrics": dict(self.metrics),
             "stopped_reason": self.stopped_reason,
         }
+
+    def _finish_barrier(self, batch_id: int, hwm: int) -> None:
+        """A merged barrier batch whose DDL group is not yet applied (a crash
+        between the merge commit and the group's `ddl_lsn` marker): apply
+        the group at `hwm`, then write the batch's checkpoint row."""
+        group = [d for d in self._ddls if d["lsn"] == hwm]
+        marker = int(self.pages.manifest.properties.get(f"ddl_lsn.{self.cfg.job_id}", -1))
+        if group and marker < hwm:
+            self._apply_ddl_group(group, hwm)
+            self._write_checkpoint(batch_id, hwm)
+
+    def _apply_ddl_group(self, group: list[dict], lsn: int) -> None:
+        """Apply the DDL events at one barrier lsn, then commit the
+        `ddl_lsn.{job_id}` marker on the bound table (the renamed one after
+        a rename; none once the table is dropped, whose restart stops
+        anyway)."""
+        for d in group:
+            self._apply_ddl(d)
+            self.metrics["ddl_records"] += 1
+        if self.stopped_reason is None:
+            self.pages.set_properties({f"ddl_lsn.{self.cfg.job_id}": str(lsn)})
 
     # ------------------------------------------------------------- one batch
 
@@ -704,16 +715,6 @@ class CdcEngine:
         t0 = time.monotonic()
         cfg = self.cfg
         self.pages.refresh()
-
-        # job-scoped hwm guard: a table fed by several jobs (two-way sync,
-        # multi-source fan-in) keeps one watermark per job — a peer job's
-        # merge must not make this job's slice look already-applied.
-        # Legacy single-key fallback only when the last writer WAS this job.
-        props = self.pages.manifest.properties
-        hwm_prop = props.get(f"hwm_lsn.{cfg.job_id}")
-        if hwm_prop is None and props.get("job_id") == cfg.job_id:
-            hwm_prop = props.get("hwm_lsn")
-        already_applied = int(hwm_prop or 0) >= hi
         slice_df = self._slice(lo, hi)
         obs = Observation()
         input_metrics = (
@@ -733,7 +734,7 @@ class CdcEngine:
         pinned: list = []
         checkpoints: list = []
         try:
-            if self._cidx is not None and not already_applied:
+            if self._cidx is not None:
                 # persist the prepared batch: the bloom/verify classification
                 # and the post-merge index append both re-read it, and without
                 # a pin each pass would re-run the extraction UDF over the html
@@ -742,7 +743,7 @@ class CdcEngine:
                 deduped, cd_fresh, _, cd_dropped = self._index_filter(
                     deduped, checkpoints, "content_index_path", self._content_dups
                 )
-            if self._ndidx is not None and not already_applied:
+            if self._ndidx is not None:
                 # pin for the same reason as the exact filter (the match and
                 # the post-merge append both re-read the batch); when the
                 # exact filter already pinned, this pins its OUTPUT so the
@@ -755,99 +756,92 @@ class CdcEngine:
 
             t_prep = time.monotonic() - t0
             t_feed = 0.0
-            if cfg.feed_path and not already_applied:
+            if cfg.feed_path:
                 tf0 = time.monotonic()
                 deduped = deduped.persist()
                 pinned.append(deduped)
                 emit_change_feed(self.spark, self.pages, deduped, cfg)
                 t_feed = time.monotonic() - tf0
-            if not already_applied:
-                stats = merge_into(
-                    self.spark,
-                    self.pages,
-                    deduped,
-                    properties={
-                        "hwm_lsn": str(hi),
-                        f"hwm_lsn.{cfg.job_id}": str(hi),
-                        "batch_id": str(batch_id),
-                        "job_id": cfg.job_id,
-                    },
-                    dedup_source=False,  # already deduped above
-                    pre_clustered=self.pages.manifest.bucket_key == cfg.key_col,
+            stats = merge_into(
+                self.spark,
+                self.pages,
+                deduped,
+                properties={
+                    f"hwm_lsn.{cfg.job_id}": str(hi),
+                    f"batch_id.{cfg.job_id}": str(batch_id),
+                },
+                dedup_source=False,  # already deduped above
+                pre_clustered=self.pages.manifest.bucket_key == cfg.key_col,
+            )
+            # AFTER the merge commit (see EngineConfig.content_index_path
+            # for the crash-window contract): record only the inserts
+            # that actually MERGED — when the near-dup filter also ran,
+            # its survivors are the final set for both indexes
+            to_index = nd_fresh if self._ndidx is not None else cd_fresh
+            if self._cidx is not None and to_index is not None:
+                self._cidx.append(to_index, text_col="text", id_col=cfg.key_col)
+            if self._ndidx is not None and nd_fresh is not None:
+                # rows= reuses the batch's checkpointed signatures —
+                # the append pays only the bucket shuffle + write
+                self._ndidx.append(
+                    nd_fresh, text_col="text", id_col=cfg.key_col, rows=nd_rows
                 )
-                # AFTER the merge commit (see EngineConfig.content_index_path
-                # for the crash-window contract): record only the inserts
-                # that actually MERGED — when the near-dup filter also ran,
-                # its survivors are the final set for both indexes
-                to_index = nd_fresh if self._ndidx is not None else cd_fresh
-                if self._cidx is not None and to_index is not None:
-                    self._cidx.append(to_index, text_col="text", id_col=cfg.key_col)
-                if self._ndidx is not None and nd_fresh is not None:
-                    # rows= reuses the batch's checkpointed signatures —
-                    # the append pays only the bucket shuffle + write
-                    self._ndidx.append(
-                        nd_fresh, text_col="text", id_col=cfg.key_col, rows=nd_rows
+            # bounded index maintenance (the sidecar analog of the lake's
+            # maybe_compact): fold per-append files once any bucket's
+            # count exceeds the cap, so match/verify reads stay
+            # data-bound instead of file-listing-bound over a long tail;
+            # after a compaction the snapshot GC drops the generations
+            # it superseded when retention is on (the lake tables' knob)
+            for idx in (self._cidx, self._ndidx):
+                if (
+                    idx is not None
+                    and cfg.index_compact_max_files > 0
+                    and idx.stats()["max_files_per_bucket"] > cfg.index_compact_max_files
+                ):
+                    idx.compact(self.spark)
+                    if cfg.expire_keep_last > 0:
+                        idx.table.expire_snapshots(keep_last=cfg.expire_keep_last)
+            # Observation.get BLOCKS FOREVER when the CollectMetrics node ran
+            # zero tasks (a plan the optimizer collapses to an empty relation
+            # never resolves it) — an `except` around .get can't catch a hang.
+            # Probe the JVM row non-blockingly first (getRowOrEmpty compiles
+            # public from Scala's private[spark]); only then read .get.
+            # The accessor leans on private PySpark internals (obs._jo +
+            # getRowOrEmpty): if a Spark upgrade removes either, EVERY batch
+            # would silently pay the counted fallback's extra scan — probe
+            # once per engine, cache, and warn loudly the moment the
+            # fallback becomes the steady-state path (r4 ADVICE).
+            resolved = False
+            if getattr(self, "_obs_accessor_ok", True):
+                try:
+                    jopt = obs._jo.getRowOrEmpty()
+                    # zero-task runs can also resolve to a schema-less EMPTY
+                    # row, which .get cannot convert — unresolved too (this
+                    # is a per-batch condition, NOT an accessor failure)
+                    resolved = (not jopt.isEmpty()) and jopt.get().length() > 0
+                    self._obs_accessor_ok = True
+                except Exception:
+                    self._obs_accessor_ok = False
+                    _LOG.warning(
+                        "Observation.getRowOrEmpty accessor unavailable on "
+                        "this Spark build — every batch will now run an "
+                        "extra aggregate job over its slice for input metrics"
                     )
-                # bounded index maintenance (the sidecar analog of the lake's
-                # maybe_compact): fold per-append files once any bucket's
-                # count exceeds the cap, so match/verify reads stay
-                # data-bound instead of file-listing-bound over a long tail;
-                # after a compaction the snapshot GC drops the generations
-                # it superseded when retention is on (the lake tables' knob)
-                for idx in (self._cidx, self._ndidx):
-                    if (
-                        idx is not None
-                        and cfg.index_compact_max_files > 0
-                        and idx.stats()["max_files_per_bucket"] > cfg.index_compact_max_files
-                    ):
-                        idx.compact(self.spark)
-                        if cfg.expire_keep_last > 0:
-                            idx.table.expire_snapshots(keep_last=cfg.expire_keep_last)
-                # Observation.get BLOCKS FOREVER when the CollectMetrics node ran
-                # zero tasks (a plan the optimizer collapses to an empty relation
-                # never resolves it) — an `except` around .get can't catch a hang.
-                # Probe the JVM row non-blockingly first (getRowOrEmpty compiles
-                # public from Scala's private[spark]); only then read .get.
-                # The accessor leans on private PySpark internals (obs._jo +
-                # getRowOrEmpty): if a Spark upgrade removes either, EVERY batch
-                # would silently pay the counted fallback's extra scan — probe
-                # once per engine, cache, and warn loudly the moment the
-                # fallback becomes the steady-state path (r4 ADVICE).
-                resolved = False
-                if getattr(self, "_obs_accessor_ok", True):
-                    try:
-                        jopt = obs._jo.getRowOrEmpty()
-                        # zero-task runs can also resolve to a schema-less EMPTY
-                        # row, which .get cannot convert — unresolved too (this
-                        # is a per-batch condition, NOT an accessor failure)
-                        resolved = (not jopt.isEmpty()) and jopt.get().length() > 0
-                        self._obs_accessor_ok = True
-                    except Exception:
-                        self._obs_accessor_ok = False
-                        _LOG.warning(
-                            "Observation.getRowOrEmpty accessor unavailable on "
-                            "this Spark build — every batch will now run an "
-                            "extra aggregate job over its slice for input metrics"
-                        )
-                if resolved:
-                    got = obs.get
-                    input_records = int(got["records"] or 0)
-                    input_bytes = int(got["bytes"] or 0)
-                else:
-                    # unresolved Observation (an empty slice; also seen on a
-                    # first batch with both sidecar indexes on): one bounded
-                    # aggregate job over the slice computes the same metrics
-                    got = slice_df.agg(*input_metrics).collect()[0]
-                    input_records = int(got["records"])
-                    input_bytes = int(got["bytes"] or 0)
-                self.metrics["record_count"] += input_records
-                self.metrics["data_bytes"] += input_bytes
-                self.metrics["sinked_records"] += stats.output_rows if stats.output_rows > 0 else 0
-                self._write_lineage(batch_id, lo, hi, stats, input_records, t0)
+            if resolved:
+                got = obs.get
+                input_records = int(got["records"] or 0)
+                input_bytes = int(got["bytes"] or 0)
             else:
-                # crash-recovery replay: MERGE already committed for this slice —
-                # skip it (manifest hwm guard) and just restore the checkpoint row.
-                stats = None
+                # unresolved Observation (an empty slice; also seen on a
+                # first batch with both sidecar indexes on): one bounded
+                # aggregate job over the slice computes the same metrics
+                got = slice_df.agg(*input_metrics).collect()[0]
+                input_records = int(got["records"])
+                input_bytes = int(got["bytes"] or 0)
+            self.metrics["record_count"] += input_records
+            self.metrics["data_bytes"] += input_bytes
+            self.metrics["sinked_records"] += stats.output_rows if stats.output_rows > 0 else 0
+            self._write_lineage(batch_id, lo, hi, stats, input_records, t0)
 
         finally:
             for _p in pinned:
@@ -873,16 +867,9 @@ class CdcEngine:
             self.lineage.expire_snapshots(keep_last=cfg.expire_keep_last)
         t_compact = time.monotonic() - t0 - t_prep - t_feed - t_merge
 
-        for d in ddls or []:
-            self._apply_ddl(d)
-            self.metrics["ddl_records"] += 1
-
-        # a lifecycle DDL that just dropped the database holding this
-        # engine's own bookkeeping tables leaves nowhere to checkpoint —
-        # probing existence only on the stop path keeps the hot loop free
-        # of an extra listing
-        if self.stopped_reason is None or LakeTable.exists(self.checkpoints.path):
-            self._write_checkpoint(batch_id, hi)
+        if ddls:
+            self._apply_ddl_group(ddls, hi)
+        self._write_checkpoint(batch_id, hi)
         if self.oplog is not None:
             # file-tail ops surface (position.log / monitor.log parity):
             # after the checkpoint commit, received == committed == hi
@@ -893,11 +880,11 @@ class CdcEngine:
             wall = time.monotonic() - t0
             self.oplog.log_counter(
                 "pipeline", cfg.job_id, "record_count",
-                {"sum": input_records if not already_applied else 0},
+                {"sum": input_records},
             )
             self.oplog.log_counter(
                 "pipeline", cfg.job_id, "data_bytes",
-                {"sum": input_bytes if not already_applied else 0},
+                {"sum": input_bytes},
             )
             self.oplog.log_counter(
                 "pipeline", cfg.job_id, "rt_per_query",
@@ -918,7 +905,6 @@ class CdcEngine:
                 "bookkeep_s": round(
                     time.monotonic() - t0 - t_prep - t_feed - t_merge - t_compact, 2
                 ),
-                "skipped_merge": already_applied,
                 **({"content_dups": cd_dropped} if self._cidx is not None else {}),
                 **({"near_dups": nd_dropped} if self._ndidx is not None else {}),
             }
@@ -1096,6 +1082,12 @@ class CdcEngine:
         self.lineage.append_rows([tuple(r) for r in rows])
 
     def _write_checkpoint(self, batch_id: int, hwm: int) -> None:
+        """Append the audit row of a committed position.  A lifecycle DDL
+        that just dropped the database holding this engine's own
+        bookkeeping tables leaves nowhere to write it — probing existence
+        only on the stop path keeps the hot loop free of an extra listing."""
+        if self.stopped_reason is not None and not LakeTable.exists(self.checkpoints.path):
+            return
         self.checkpoints.append_rows(
             [
                 (

@@ -8,7 +8,7 @@ dt-parallelizer/src/table_parallelizer.rs (one lane per table).
 Spark-first expression: each table is an independent CdcEngine over its own
 (pages, changes) pair; concurrency is a thread pool of drivers sharing ONE
 SparkSession — Spark's scheduler interleaves their jobs (FAIR pools give
-per-table isolation).  Each table keeps its own checkpoint high-watermark,
+per-table isolation).  Each table keeps its own committed high-watermark,
 so resume/skip-finished falls out of the single-table protocol.
 """
 

@@ -144,9 +144,29 @@ def test_crash_and_resume_converges(spark, fixture_dir, tmp_path, stage):
     with pytest.raises(RuntimeError, match="injected crash"):
         _run(spark, fixture_dir, t.path, crash_hook=_CrashAt(stage, 2))
     # fresh engine resumes from the last committed checkpoint
-    _, summary = _run(spark, fixture_dir, t.path)
+    eng, summary = _run(spark, fixture_dir, t.path)
     assert summary["batches"] > 0
     _assert_tables_equal(_pages_pd(spark, t), _oracle_pd(spark, fixture_dir))
+    # the resume starts where the last merge commit ended: the per-batch lsn
+    # ranges in lineage are disjoint and cover the stream, so the crashed
+    # slice is not read again
+    ranges = sorted(
+        {(r["lsn_min"], r["lsn_max"]) for r in eng.lineage.read(spark).collect()}
+    )
+    assert ranges[0][0] == 1 and ranges[-1][1] == N_EVENTS
+    assert all(a[1] + 1 == b[0] for a, b in zip(ranges, ranges[1:]))
+    # the committed position is the pages manifest's
+    assert eng.committed_hwm() == (
+        int(t.refresh().manifest.properties["hwm_lsn.job1"]),
+        eng.batch_log[-1]["batch_id"],
+    )
+    # every batch the resumed run applied has a checkpoint row, and so does
+    # batch 2: a barrier batch (rename_column at lsn 721), whose DDL group
+    # the resume finishes before it continues.  A post_merge crash on a
+    # non-barrier batch leaves that batch without a checkpoint row (its
+    # lineage rows are written before that point)
+    cps = {r["batch_id"] for r in eng.checkpoints.read(spark).collect()}
+    assert {b["batch_id"] for b in eng.batch_log} | {2} <= cps
 
 
 def test_event_filter_excludes_deletes(spark, fixture_dir, tmp_path):
@@ -489,13 +509,17 @@ def test_slice_reads_only_overlapping_files(spark, tmp_path, case):
 
 
 def test_poll_without_new_files_runs_no_change_scan(spark, tmp_path):
-    """A run() that finds no new change file runs no Spark job over the
-    change directory: its job count equals that of committed_hwm() alone."""
+    """Constructing an engine with a DDL stream, committed_hwm(), a run()
+    that finds no new change file and a heartbeat run no Spark job: the DDL
+    stream, the committed position and the change directory are all read
+    on the driver."""
     ch = str(tmp_path / "changes")
     gen_changes(spark, 30, SMALL_SEED, seed=7).coalesce(1).write.parquet(ch)
+    ddl = tmp_path / "ddl"
+    _write_ddls(spark, ddl, [(10, "add_column", '{"col":"quality","type":"int"}')])
     t = _small_pages(spark, tmp_path / "pages")
-    eng = CdcEngine(spark, EngineConfig(job_id="poll", pages_path=t.path, changes_path=ch))
-    assert eng.run()["hwm"] == 30
+    cfg = EngineConfig(job_id="poll", pages_path=t.path, changes_path=ch, ddl_path=str(ddl))
+    assert CdcEngine(spark, cfg).run()["hwm"] == 30
     sc = spark.sparkContext
 
     def jobs(group, fn):
@@ -506,6 +530,10 @@ def test_poll_without_new_files_runs_no_change_scan(spark, tmp_path):
             sc.setLocalProperty("spark.jobGroup.id", None)
         return len(sc.statusTracker().getJobIdsForGroup(group))
 
-    hwm_jobs = jobs("poll-hwm", eng.committed_hwm)
-    assert hwm_jobs >= 1
-    assert jobs("poll-run", lambda: eng.run()) == hwm_jobs
+    engines = []
+    assert jobs("poll-init", lambda: engines.append(CdcEngine(spark, cfg))) == 0
+    eng = engines[0]
+    assert jobs("poll-hwm", eng.committed_hwm) == 0
+    assert jobs("poll-run", eng.run) == 0
+    assert jobs("poll-heartbeat", eng.heartbeat) == 0
+    assert eng.committed_hwm() == (30, 1)

@@ -112,7 +112,7 @@ def test_near_dups_dropped_updates_and_deletes_pass(spark, tmp_path):
     assert "https://a.com/3" not in rows  # near-dup insert dropped
     assert _BODY_A2 in rows["https://a.com/2"]  # update passed through
     assert _BODY_C in rows["https://a.com/4"]  # novel insert kept
-    drops = [b.get("near_dups", 0) for b in eng.batch_log if not b["skipped_merge"]]
+    drops = [b.get("near_dups", 0) for b in eng.batch_log]
     assert sum(drops) == 1
     # only MERGED inserts were indexed: urls 1, 2, 4
     assert eng._ndidx.stats()["total_docs"] == 3
@@ -175,9 +175,8 @@ def test_combined_with_content_index(spark, tmp_path):
         for r in pages.refresh().read(spark).filter("url LIKE 'https://a.com/%'").collect()
     }
     assert urls == {"https://a.com/1", "https://a.com/2"}
-    live = [b for b in eng.batch_log if not b["skipped_merge"]]
-    assert sum(b.get("content_dups", 0) for b in live) == 1
-    assert sum(b.get("near_dups", 0) for b in live) == 1
+    assert sum(b.get("content_dups", 0) for b in eng.batch_log) == 1
+    assert sum(b.get("near_dups", 0) for b in eng.batch_log) == 1
     # both indexes recorded only the two MERGED inserts
     assert eng._cidx.stats()["total_keys"] == 2
     assert eng._ndidx.stats()["total_docs"] == 2
@@ -208,7 +207,7 @@ def test_batches_release_their_checkpoints(spark, tmp_path):
     before = set(jsc.getPersistentRDDs().keys())
     eng = CdcEngine(spark, cfg)
     eng.run()
-    assert len([b for b in eng.batch_log if not b["skipped_merge"]]) == 3
+    assert len(eng.batch_log) == 3
     assert set(jsc.getPersistentRDDs().keys()) - before == set()
     assert eng._cidx.stats()["total_keys"] == 3
     assert eng._ndidx.stats()["total_docs"] == 3

@@ -127,6 +127,22 @@ def test_precheck_ok_and_failures(spark, tmp_path):
     cfg4.ddl_path = bad_ddl
     with pytest.raises(PrecheckError, match="not valid JSON"):
         precheck(spark, cfg4)
+    # a DDL path with no data files is as fatal as an empty change stream
+    cfg4.ddl_path = str(tmp_path / "no_ddl")
+    with pytest.raises(PrecheckError, match="no data files"):
+        precheck(spark, cfg4)
+
+    # the committed position must not be ahead of the stream end (a
+    # truncated or rotated source): complete a job, then shorten its stream
+    from ape_dts_spark.streaming.driver import CdcEngine
+
+    cfg5 = _mk_cfg(tmp_path / "r", spark)
+    assert CdcEngine(spark, cfg5).run()["hwm"] == 500
+    assert precheck(spark, cfg5)["resume_hwm"] == 500
+    cfg5.changes_path = str(tmp_path / "short")
+    gen_changes(spark, 200, 100, seed=1).write.parquet(cfg5.changes_path)
+    with pytest.raises(PrecheckError, match="checkpoint hwm 500 is ahead of stream end 200"):
+        precheck(spark, cfg5)
 
 
 def test_resolved_read_is_bucket_aligned_single_shuffle(spark, tmp_path):
